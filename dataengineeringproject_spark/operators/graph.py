@@ -65,9 +65,17 @@ def _reset_stats(df: DataFrame) -> DataFrame:
     Pure JVM (SparkSession.createDataFrame(RDD[Row], schema)): no
     Python-RDD roundtrip, no recomputation (the source is the
     checkpointed RDD), one extra Row<->InternalRow conversion on scan
-    of these few-column long frames."""
-    jdf = df._jdf
+    of these few-column long frames. Needs a classic (JVM-backed)
+    session: Spark Connect frames have no _jdf/_jsparkSession, and are
+    rejected with a clear error instead of an AttributeError."""
     spark = df.sparkSession
+    if not (hasattr(df, "_jdf") and hasattr(spark, "_jsparkSession")):
+        raise RuntimeError(
+            "connected_components needs a classic SparkSession: it resets "
+            "plan statistics through the JVM DataFrame (_jdf/_jsparkSession), "
+            "which Spark Connect sessions do not expose"
+        )
+    jdf = df._jdf
     return DataFrame(
         spark._jsparkSession.createDataFrame(jdf.rdd(), jdf.schema()),
         spark,
@@ -93,11 +101,12 @@ def connected_components(
     fixpoint of both steps is the per-component min id — the jumps
     change the ROUND COUNT (O(log diameter) instead of O(diameter)),
     never the answer (pinned by tests/test_r16_opt.py on chain + random
-    fixtures against plain propagation). Convergence checked with a
-    1-row count action. If labels are still changing after max_iter
-    rounds, the result is truncated: strict=True raises
-    NonConvergenceError, strict=False emits a RuntimeWarning so callers
-    can distinguish converged from truncated output (ADVICE r1)."""
+    fixtures against plain propagation). Convergence is a flag observed
+    during each round's checkpoint job (no separate count action). If
+    labels are still changing after max_iter rounds, the result is
+    truncated: strict=True raises NonConvergenceError, strict=False
+    emits a RuntimeWarning so callers can distinguish converged from
+    truncated output (ADVICE r1)."""
     both = edges.select(
         F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
     ).union(edges.select(F.col(dst_col).alias("src"), F.col(src_col).alias("dst")))

@@ -15,7 +15,12 @@ from dataengineeringproject_spark.operators.relational import (
     pivot_counts,
     sessionize,
 )
-from dataengineeringproject_spark.registry import register, register_prestage
+from dataengineeringproject_spark.registry import (
+    register,
+    register_prestage,
+    scratch_dir,
+    staged,
+)
 from dataengineeringproject_spark.schemas import load_table, local_df
 
 _EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
@@ -2431,9 +2436,9 @@ def cdc_latest_state_tombstones(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- merge-on-read CDC compaction --------------------------------------------
 
 _CDC_CUTOFF = "2024-01-21 00:00:00"  # base = first 20 days, deltas = rest
-_CDC_BASE_STAGED: dict[str, str] = {}
 
 
+@staged("events")
 def _staged_cdc_base(spark: SparkSession, sf_dir: str) -> str:
     """Materialize the compacted BASE snapshot — latest non-tombstone
     state per key among changes BEFORE the cutoff — to parquet once per
@@ -2441,12 +2446,6 @@ def _staged_cdc_base(spark: SparkSession, sf_dir: str) -> str:
     MOR, Delta + CDF). In production this file set is what the LAST
     compaction wrote; the query reads it back instead of re-collapsing
     pre-cutoff history."""
-    if sf_dir in _CDC_BASE_STAGED:
-        return _CDC_BASE_STAGED[sf_dir]
-    import atexit
-    import shutil
-    import tempfile
-
     from pyspark.sql import Window
 
     ev = load_table(spark, sf_dir, "events").filter(
@@ -2463,10 +2462,8 @@ def _staged_cdc_base(spark: SparkSession, sf_dir: str) -> str:
             F.round("value", 6).alias("last_value"),
         )
     )
-    path = tempfile.mkdtemp(prefix="deps_cdc_base_")
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
+    path = scratch_dir("deps_cdc_base_")
     base.write.mode("overwrite").parquet(path)
-    _CDC_BASE_STAGED[sf_dir] = path
     return path
 
 
@@ -2537,9 +2534,6 @@ def cdc_merge_on_read_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- STREAMING CDC upsert (foreachBatch MERGE into a keyed gold table) -------
 
-_CDC_STREAM_RESULT: dict[str, str] = {}
-
-
 def _cdc_state_schema(batch_ev: DataFrame):
     """Schema of the CDC state table: the change projection cdc_merge_frames
     builds from a raw events frame."""
@@ -2577,6 +2571,59 @@ def cdc_merge_frames(state: DataFrame | None, batch_ev: DataFrame) -> DataFrame:
         .filter(F.col("rn") == 1)
         .drop("rn")
     )
+
+
+@staged("events")
+def _run_cdc_stream(spark: SparkSession, sf_dir: str) -> str:
+    """Drive the MERGE-loop stream (streaming_cdc_scd1_upsert) over the
+    staged landing zone once per events generation; returns the last
+    committed state version's dir."""
+    from dataengineeringproject_spark.queries.streaming_q import _staged_events
+
+    land = _staged_events(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
+    state_root = scratch_dir("deps_cdc_stream_state_")
+    ckpt = scratch_dir("deps_cdc_stream_ckpt_")
+    state: dict[str, str | None] = {"path": None}
+
+    def _merge(batch_ev: DataFrame, batch_id: int) -> None:
+        prev = (
+            None
+            if state["path"] is None
+            else spark.read.schema(_cdc_state_schema(batch_ev)).parquet(
+                state["path"]
+            )
+        )
+        merged = cdc_merge_frames(prev, batch_ev)
+        new_path = f"{state_root}/v{batch_id}"
+        merged.write.mode("overwrite").parquet(new_path)
+        state["path"] = new_path
+        # retention runs as part of the commit loop: storage stays
+        # bounded at 2 snapshots (current + one grace copy for
+        # in-flight readers) instead of growing by one per trigger
+        from dataengineeringproject_spark.sources.layout import (
+            vacuum_versions,
+        )
+
+        vacuum_versions(state_root, keep=2, current=new_path)
+
+    from dataengineeringproject_spark.queries.streaming_q import (
+        _pinned_shuffle_partitions,
+    )
+
+    with _pinned_shuffle_partitions(spark, 8):
+        q = (
+            spark.readStream.schema(ev.schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(land)
+            .writeStream.foreachBatch(_merge)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+    assert state["path"] is not None
+    return state["path"]
 
 
 @register(
@@ -2625,65 +2672,7 @@ def streaming_cdc_scd1_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     only the micro-batch + touched state partitions under AQE), the
     per-trigger cost is O(micro-batch + state), and restart replays
     from the checkpoint against the last committed state version."""
-    if sf_dir in _CDC_STREAM_RESULT:
-        return spark.read.parquet(_CDC_STREAM_RESULT[sf_dir]).filter(
-            F.col("last_op") != "error"
-        ).drop("ts", "event_id", "value")
-    import atexit
-    import shutil
-    import tempfile
-
-    from pyspark.sql import Window
-
-    from dataengineeringproject_spark.queries.streaming_q import _staged_events
-
-    land = _staged_events(spark, sf_dir)
-    ev = load_table(spark, sf_dir, "events")
-    state_root = tempfile.mkdtemp(prefix="deps_cdc_stream_state_")
-    ckpt = tempfile.mkdtemp(prefix="deps_cdc_stream_ckpt_")
-    for p in (state_root, ckpt):
-        atexit.register(shutil.rmtree, p, ignore_errors=True)
-    state: dict[str, str | None] = {"path": None}
-
-    def _merge(batch_ev: DataFrame, batch_id: int) -> None:
-        prev = (
-            None
-            if state["path"] is None
-            else spark.read.schema(_cdc_state_schema(batch_ev)).parquet(
-                state["path"]
-            )
-        )
-        merged = cdc_merge_frames(prev, batch_ev)
-        new_path = f"{state_root}/v{batch_id}"
-        merged.write.mode("overwrite").parquet(new_path)
-        state["path"] = new_path
-        # retention runs as part of the commit loop: storage stays
-        # bounded at 2 snapshots (current + one grace copy for
-        # in-flight readers) instead of growing by one per trigger
-        from dataengineeringproject_spark.sources.layout import (
-            vacuum_versions,
-        )
-
-        vacuum_versions(state_root, keep=2, current=new_path)
-
-    from dataengineeringproject_spark.queries.streaming_q import (
-        _pinned_shuffle_partitions,
-    )
-
-    with _pinned_shuffle_partitions(spark, 8):
-        q = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(land)
-            .writeStream.foreachBatch(_merge)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    assert state["path"] is not None
-    _CDC_STREAM_RESULT[sf_dir] = state["path"]
-    return spark.read.parquet(state["path"]).filter(
+    return spark.read.parquet(_run_cdc_stream(spark, sf_dir)).filter(
         F.col("last_op") != "error"
     ).drop("ts", "event_id", "value")
 
@@ -9102,7 +9091,93 @@ def effective_source_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- STREAMING event transitions (sequence family batch/streaming symmetry) ---------
 
-_ETR_STREAM_RESULT: dict[str, str] = {}
+
+@staged("events")
+def _run_etr_stream(spark: SparkSession, sf_dir: str) -> str:
+    """Drive the transition-counting stream (streaming_event_transitions)
+    over the staged landing zone once per events generation; returns
+    the last committed counts version's dir."""
+    from pyspark.sql import Window
+
+    from dataengineeringproject_spark.queries.streaming_q import (
+        _pinned_shuffle_partitions,
+        _staged_events,
+    )
+    from dataengineeringproject_spark.sources.layout import (
+        vacuum_versions,
+    )
+
+    land = _staged_events(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
+    roots = {k: scratch_dir(f"deps_etr_{k}_") for k in ("last", "cnt", "ckpt")}
+    st: dict[str, str | None] = {"last": None, "cnt": None}
+
+    def _step(batch_ev: DataFrame, batch_id: int) -> None:
+        w = Window.partitionBy("user_id").orderBy(
+            F.asc("ts"), F.asc("event_id")
+        )
+        b = batch_ev.select(
+            "user_id", "event_type", "ts", "event_id",
+            F.lead("event_type").over(w).alias("nxt"),
+            F.row_number().over(w).alias("rn"),
+            F.count(F.lit(1))
+            .over(Window.partitionBy("user_id"))
+            .alias("cnt_u"),
+        )
+        inb = (
+            b.filter(F.col("nxt").isNotNull())
+            .groupBy(
+                F.col("event_type").alias("cur_type"),
+                F.col("nxt").alias("next_type"),
+            )
+            .agg(F.count(F.lit(1)).alias("n"))
+        )
+        first = b.filter(F.col("rn") == 1).select(
+            "user_id", F.col("event_type").alias("first_type")
+        )
+        last = b.filter(F.col("rn") == F.col("cnt_u")).select(
+            "user_id",
+            F.col("event_type").alias("last_type"),
+            "ts",
+            "event_id",
+        )
+        if st["last"] is not None:
+            prev_last = spark.read.parquet(st["last"])
+            boundary = (
+                prev_last.join(first, "user_id")
+                .groupBy(
+                    F.col("last_type").alias("cur_type"),
+                    F.col("first_type").alias("next_type"),
+                )
+                .agg(F.count(F.lit(1)).alias("n"))
+            )
+            inb = inb.unionByName(boundary)
+            # users silent this batch keep their dangling end
+            carry = prev_last.join(last, "user_id", "left_anti")
+            last = last.unionByName(carry)
+        if st["cnt"] is not None:
+            inb = inb.unionByName(spark.read.parquet(st["cnt"]))
+        cnt_new = inb.groupBy("cur_type", "next_type").agg(
+            F.sum("n").alias("n")
+        )
+        for key, df in (("last", last), ("cnt", cnt_new)):
+            path = f"{roots[key]}/v{batch_id}"
+            df.write.mode("overwrite").parquet(path)
+            st[key] = path
+            vacuum_versions(roots[key], keep=2, current=path)
+
+    with _pinned_shuffle_partitions(spark, 8):
+        q = (
+            spark.readStream.schema(ev.schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(land)
+            .writeStream.foreachBatch(_step)
+            .option("checkpointLocation", roots["ckpt"])
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+    return st["cnt"]
 
 
 @register(
@@ -9146,100 +9221,7 @@ def streaming_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     — this is how production sessionizers stitch sequences across
     triggers (Flink keyed state; Spark's own sessionization keeps the
     same dangling-end state)."""
-    if sf_dir in _ETR_STREAM_RESULT:
-        counts = spark.read.parquet(_ETR_STREAM_RESULT[sf_dir])
-    else:
-        import atexit
-        import shutil
-        import tempfile
-
-        from pyspark.sql import Window
-
-        from dataengineeringproject_spark.queries.streaming_q import (
-            _pinned_shuffle_partitions,
-            _staged_events,
-        )
-        from dataengineeringproject_spark.sources.layout import (
-            vacuum_versions,
-        )
-
-        land = _staged_events(spark, sf_dir)
-        ev = load_table(spark, sf_dir, "events")
-        roots = {
-            k: tempfile.mkdtemp(prefix=f"deps_etr_{k}_")
-            for k in ("last", "cnt", "ckpt")
-        }
-        for p in roots.values():
-            atexit.register(shutil.rmtree, p, ignore_errors=True)
-        st: dict[str, str | None] = {"last": None, "cnt": None}
-
-        def _step(batch_ev: DataFrame, batch_id: int) -> None:
-            w = Window.partitionBy("user_id").orderBy(
-                F.asc("ts"), F.asc("event_id")
-            )
-            b = batch_ev.select(
-                "user_id", "event_type", "ts", "event_id",
-                F.lead("event_type").over(w).alias("nxt"),
-                F.row_number().over(w).alias("rn"),
-                F.count(F.lit(1))
-                .over(Window.partitionBy("user_id"))
-                .alias("cnt_u"),
-            )
-            inb = (
-                b.filter(F.col("nxt").isNotNull())
-                .groupBy(
-                    F.col("event_type").alias("cur_type"),
-                    F.col("nxt").alias("next_type"),
-                )
-                .agg(F.count(F.lit(1)).alias("n"))
-            )
-            first = b.filter(F.col("rn") == 1).select(
-                "user_id", F.col("event_type").alias("first_type")
-            )
-            last = b.filter(F.col("rn") == F.col("cnt_u")).select(
-                "user_id",
-                F.col("event_type").alias("last_type"),
-                "ts",
-                "event_id",
-            )
-            if st["last"] is not None:
-                prev_last = spark.read.parquet(st["last"])
-                boundary = (
-                    prev_last.join(first, "user_id")
-                    .groupBy(
-                        F.col("last_type").alias("cur_type"),
-                        F.col("first_type").alias("next_type"),
-                    )
-                    .agg(F.count(F.lit(1)).alias("n"))
-                )
-                inb = inb.unionByName(boundary)
-                # users silent this batch keep their dangling end
-                carry = prev_last.join(last, "user_id", "left_anti")
-                last = last.unionByName(carry)
-            if st["cnt"] is not None:
-                inb = inb.unionByName(spark.read.parquet(st["cnt"]))
-            cnt_new = inb.groupBy("cur_type", "next_type").agg(
-                F.sum("n").alias("n")
-            )
-            for key, df in (("last", last), ("cnt", cnt_new)):
-                path = f"{roots[key]}/v{batch_id}"
-                df.write.mode("overwrite").parquet(path)
-                st[key] = path
-                vacuum_versions(roots[key], keep=2, current=path)
-
-        with _pinned_shuffle_partitions(spark, 8):
-            q = (
-                spark.readStream.schema(ev.schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(land)
-                .writeStream.foreachBatch(_step)
-                .option("checkpointLocation", roots["ckpt"])
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        _ETR_STREAM_RESULT[sf_dir] = st["cnt"]
-        counts = spark.read.parquet(st["cnt"])
+    counts = spark.read.parquet(_run_etr_stream(spark, sf_dir))
     r = counts.groupBy("cur_type").agg(F.sum("n").alias("tot"))
     return counts.join(F.broadcast(r), "cur_type").select(
         "cur_type",

@@ -16,7 +16,14 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dataengineeringproject_spark.functions import text as X
-from dataengineeringproject_spark.registry import register, register_prestage
+from dataengineeringproject_spark.registry import (
+    fingerprint_token,
+    register,
+    register_prestage,
+    scratch_dir,
+    source_fingerprint,
+    staged,
+)
 from dataengineeringproject_spark.schemas import load_table
 
 # Per-source sampling rates (percent kept), default for unlisted sources.
@@ -297,28 +304,20 @@ def _funnel_reason() -> Column:
 # --- STREAMING quality gate (quality family batch/streaming symmetry) --------
 
 _QGATE_SLICES = 3
-_QGATE_LAND: dict[str, str] = {}
 
 
+@staged("documents")
 def _staged_docs_land(spark: SparkSession, sf_dir: str) -> str:
     """Stage the FULL corpus as a file-drop landing zone the quality
     gate watches ({_QGATE_SLICES} deterministic doc_id-mod slices,
     written oldest-first so FileStreamSource fixes micro-batch order).
     Prestage hook: file ARRIVAL is not part of the gate's cost."""
-    if sf_dir in _QGATE_LAND:
-        return _QGATE_LAND[sf_dir]
-    import atexit
-    import shutil
-    import tempfile
-
     d = _docs(spark, sf_dir)
-    land = tempfile.mkdtemp(prefix="deps_qgate_land_")
-    atexit.register(shutil.rmtree, land, ignore_errors=True)
+    land = scratch_dir("deps_qgate_land_")
     for i in range(_QGATE_SLICES):
         d.filter(F.col("doc_id") % _QGATE_SLICES == i).coalesce(
             1
         ).write.mode("append").parquet(land)
-    _QGATE_LAND[sf_dir] = land
     return land
 
 
@@ -1145,9 +1144,7 @@ def _fuz_band_min_sql(band: int, row: int) -> str:
     )
 
 
-_FUZ_KEYS_STAGED: dict[tuple, str] = {}
-
-
+@staged("documents")
 def _staged_fuz_keys(spark: SparkSession, sf_dir: str) -> str:
     """Materialize the PRE-CAP rep-level band-key frame — (doc_id,
     pfx, band, bkey), one row per (distinct-prefix representative,
@@ -1167,20 +1164,10 @@ def _staged_fuz_keys(spark: SparkSession, sf_dir: str) -> str:
     is semantics, and tests monkeypatch it), so the staged artifact
     is cap-independent, exactly like _staged_sig_index's band index.
     At 100 TB this is the persisted LSH key table maintained next to
-    the corpus, bucketed by (band, bkey) — now literally. Cache keyed
-    on the source parquet's content fingerprint, not path alone
-    (ADVICE r13); spark.table() requires staging session == query
-    session (one session per process — the driver's and bench's
-    shape, same note as _staged_tokset_wb)."""
-    from dataengineeringproject_spark.registry import source_fingerprint
-
-    ck = source_fingerprint(sf_dir, "documents")
-    if ck in _FUZ_KEYS_STAGED:
-        return _FUZ_KEYS_STAGED[ck]
-    import atexit
-    import shutil
-    import tempfile
-
+    the corpus, bucketed by (band, bkey) — now literally.
+    spark.table() requires staging session == query session (one
+    session per process — the driver's and bench's shape, same note
+    as _staged_tokset_wb)."""
     from dataengineeringproject_spark.operators.similarity import (
         ensure_min_parallelism,
     )
@@ -1226,12 +1213,10 @@ def _staged_fuz_keys(spark: SparkSession, sf_dir: str) -> str:
             )
         ).alias("bk"),
     ).select("doc_id", "pfx", "bk.band", "bk.bkey")
-    path = tempfile.mkdtemp(prefix="deps_fuzkeys_")
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
+    path = scratch_dir("deps_fuzkeys_")
     # content-addressed name (ADVICE r14): unique per source
     # generation AND per process — see registry.fingerprint_token
-    from dataengineeringproject_spark.registry import fingerprint_token
-
+    ck = source_fingerprint(sf_dir, "documents")
     name = f"deps_fuz_keys_bk_{fingerprint_token(ck)}"
     spark.sql(f"DROP TABLE IF EXISTS {name}")
     (
@@ -1242,7 +1227,6 @@ def _staged_fuz_keys(spark: SparkSession, sf_dir: str) -> str:
         .format("parquet")
         .saveAsTable(name)
     )
-    _FUZ_KEYS_STAGED[ck] = name
     return name
 
 

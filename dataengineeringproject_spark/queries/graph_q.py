@@ -27,7 +27,7 @@ corpus grows — the knob a deployment turns is K, not the data.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dataengineeringproject_spark.registry import register
@@ -80,13 +80,18 @@ def _baskets(li: DataFrame, item_col: str) -> DataFrame:
     )
 
 
-# ordered in-set expansions over the sorted per-basket item list:
-# all (sa, sb) with sa < sb, and all (i1, i2, i3) with i1 < i2 < i3.
-_PAIR_EXPAND = (
-    "flatten(transform(items, (x, i) -> "
-    "transform(slice(items, i + 2, size(items)), "
-    "y -> struct(x AS sa, y AS sb))))"
-)
+def _pair_expand(arr: str, a: str, b: str) -> Column:
+    """Ordered in-set pair expansion of the sorted array column `arr`:
+    every (a, b) struct with a < b, as an array to explode."""
+    return F.expr(
+        f"flatten(transform({arr}, (x, i) -> "
+        f"transform(slice({arr}, i + 2, size({arr})), "
+        f"y -> struct(x AS {a}, y AS {b}))))"
+    )
+
+
+# ordered in-set triple expansion over the sorted per-basket item
+# list: all (i1, i2, i3) with i1 < i2 < i3.
 _TRIPLE_EXPAND = (
     "flatten(transform(items, (x, i) -> "
     "flatten(transform(slice(items, i + 2, size(items)), (y, j) -> "
@@ -112,7 +117,7 @@ def _lift_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("c"))
     )
     p = (
-        bk.select(F.explode(F.expr(_PAIR_EXPAND)).alias("pr"))
+        bk.select(F.explode(_pair_expand("items", "sa", "sb")).alias("pr"))
         .groupBy(F.col("pr.sa").alias("sa"), F.col("pr.sb").alias("sb"))
         .agg(F.count(F.lit(1)).alias("w"))
     )
@@ -635,7 +640,7 @@ def association_rules_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("c"))
     )
     p = (
-        bk.select(F.explode(F.expr(_PAIR_EXPAND)).alias("pr"))
+        bk.select(F.explode(_pair_expand("items", "sa", "sb")).alias("pr"))
         .groupBy(F.col("pr.sa").alias("i1"), F.col("pr.sb").alias("i2"))
         .agg(F.count(F.lit(1)).alias("w2"))
     )
@@ -760,7 +765,7 @@ def degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # distinct-incidence shuffle + self-join on l_orderkey).
     p = (
         _baskets(li, "l_partkey")
-        .select(F.explode(F.expr(_PAIR_EXPAND)).alias("pr"))
+        .select(F.explode(_pair_expand("items", "sa", "sb")).alias("pr"))
         .select(F.col("pr.sa").alias("sa"), F.col("pr.sb").alias("sb"))
         .distinct()
     )
@@ -923,15 +928,7 @@ def link_prediction_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.size("items") >= 2)
     )
     p = (
-        baskets.select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(items, (x, i) -> "
-                    "transform(slice(items, i + 2, size(items)), "
-                    "y -> struct(x AS sa, y AS sb))))"
-                )
-            ).alias("pr")
-        )
+        baskets.select(F.explode(_pair_expand("items", "sa", "sb")).alias("pr"))
         .select(F.col("pr.sa").alias("sa"), F.col("pr.sb").alias("sb"))
         .distinct()
         .cache()
@@ -952,13 +949,7 @@ def link_prediction_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.size("ns") >= 2)
         .select(
             F.round(1e9 / F.log(F.col("d"))).cast("long").alias("au"),
-            F.explode(
-                F.expr(
-                    "flatten(transform(ns, (x, i) -> "
-                    "transform(slice(ns, i + 2, size(ns)), "
-                    "y -> struct(x AS na, y AS nb))))"
-                )
-            ).alias("pr"),
+            F.explode(_pair_expand("ns", "na", "nb")).alias("pr"),
         )
     )
     wedge = mid.groupBy(

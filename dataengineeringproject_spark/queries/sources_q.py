@@ -12,7 +12,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dataengineeringproject_spark.registry import register, register_prestage
+from dataengineeringproject_spark.registry import (
+    register,
+    register_prestage,
+    scratch_dir,
+    staged,
+)
 from dataengineeringproject_spark.session import ensure_package_on_workers
 from dataengineeringproject_spark.sources import pyds
 
@@ -78,27 +83,14 @@ def synth_source_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 # DuckDB from the ORIGINAL parquet. Any precision loss or quoting bug
 # in the CSV lane breaks the hash.
 
-import atexit as _atexit
-import shutil as _shutil
-import tempfile as _tempfile
-
-_CSV_STAGED: dict[str, str] = {}
 _CSV_TS_FMT = "yyyy-MM-dd HH:mm:ss.SSSSSS"
 
 
-@_atexit.register
-def _cleanup_csv_staged() -> None:
-    for d in _CSV_STAGED.values():
-        _shutil.rmtree(d, ignore_errors=True)
-    _CSV_STAGED.clear()
-
-
+@staged("events")
 def _staged_csv_events(spark: SparkSession, sf_dir: str) -> str:
-    if sf_dir in _CSV_STAGED:
-        return _CSV_STAGED[sf_dir]
     from dataengineeringproject_spark.schemas import load_table
 
-    d = _tempfile.mkdtemp(prefix="deps_csv_events_")
+    d = scratch_dir("deps_csv_events_")
     (
         load_table(spark, sf_dir, "events")
         .select("event_id", "ts", "event_type", "value")
@@ -107,7 +99,6 @@ def _staged_csv_events(spark: SparkSession, sf_dir: str) -> str:
         .option("timestampFormat", _CSV_TS_FMT)
         .csv(d)
     )
-    _CSV_STAGED[sf_dir] = d
     return d
 
 
@@ -150,24 +141,13 @@ def csv_roundtrip_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- JSONL round-trip parity (the LLM-corpus interchange lane) ---------------
 
-_JSONL_STAGED: dict[str, str] = {}
 
-
-@_atexit.register
-def _cleanup_jsonl_staged() -> None:
-    for d in _JSONL_STAGED.values():
-        _shutil.rmtree(d, ignore_errors=True)
-    _JSONL_STAGED.clear()
-
-
+@staged("documents")
 def _staged_jsonl_docs(spark: SparkSession, sf_dir: str) -> str:
-    if sf_dir in _JSONL_STAGED:
-        return _JSONL_STAGED[sf_dir]
     from dataengineeringproject_spark.schemas import load_table
 
-    d = _tempfile.mkdtemp(prefix="deps_jsonl_docs_")
+    d = scratch_dir("deps_jsonl_docs_")
     load_table(spark, sf_dir, "documents").write.mode("overwrite").json(d)
-    _JSONL_STAGED[sf_dir] = d
     return d
 
 
@@ -205,29 +185,18 @@ def jsonl_roundtrip_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- partitioned-layout read-back (partition pruning under the gate) ---------
 
-_PART_STAGED: dict[str, str] = {}
 
-
-@_atexit.register
-def _cleanup_part_staged() -> None:
-    for d in _PART_STAGED.values():
-        _shutil.rmtree(d, ignore_errors=True)
-    _PART_STAGED.clear()
-
-
+@staged("events")
 def _staged_partitioned_events(spark: SparkSession, sf_dir: str) -> str:
-    if sf_dir in _PART_STAGED:
-        return _PART_STAGED[sf_dir]
     from dataengineeringproject_spark.schemas import load_table
 
-    d = _tempfile.mkdtemp(prefix="deps_part_events_")
+    d = scratch_dir("deps_part_events_")
     (
         load_table(spark, sf_dir, "events")
         .write.mode("overwrite")
         .partitionBy("event_type")
         .parquet(d)
     )
-    _PART_STAGED[sf_dir] = d
     return d
 
 
@@ -267,33 +236,22 @@ def partition_prune_readback(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- schema-evolution read-back (mergeSchema under the gate) -----------------
 
-_EVOL_STAGED: dict[str, str] = {}
 
-
-@_atexit.register
-def _cleanup_evol_staged() -> None:
-    for d in _EVOL_STAGED.values():
-        _shutil.rmtree(d, ignore_errors=True)
-    _EVOL_STAGED.clear()
-
-
+@staged("events")
 def _staged_evolved_events(spark: SparkSession, sf_dir: str) -> str:
     """Stage events as a MIXED-SCHEMA parquet directory — the shape a
     long-lived lakehouse table actually has on disk after a column is
     added: the v1 slice (even user_id, standing in for files written
     before the migration) lacks the `props` column entirely; the v2
     slice has the full schema. Files written oldest-schema-first."""
-    if sf_dir in _EVOL_STAGED:
-        return _EVOL_STAGED[sf_dir]
     from dataengineeringproject_spark.schemas import load_table
 
     ev = load_table(spark, sf_dir, "events")
-    d = _tempfile.mkdtemp(prefix="deps_evol_events_")
+    d = scratch_dir("deps_evol_events_")
     v1 = ev.filter(F.col("user_id") % 2 == 0).drop("props")
     v2 = ev.filter(F.col("user_id") % 2 == 1)
     v1.coalesce(1).write.mode("append").parquet(d)
     v2.coalesce(1).write.mode("append").parquet(d)
-    _EVOL_STAGED[sf_dir] = d
     return d
 
 
@@ -337,35 +295,19 @@ def schema_evolution_readback(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 import hashlib as _hashlib
 
-_BUCK_STAGED: dict[str, tuple[str, str]] = {}
-_BUCK_DIRS: list[str] = []
 
-
-@_atexit.register
-def _cleanup_buck_staged() -> None:
-    for d in _BUCK_DIRS:
-        _shutil.rmtree(d, ignore_errors=True)
-    _BUCK_DIRS.clear()
-    _BUCK_STAGED.clear()
-
-
-def _staged_bucketed_ol(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
+@staged("orders", "lineitem")
+def _stage_bucketed_ol(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """Stage orders and lineitem as EXTERNAL BUCKETED tables (8 buckets
     on the order key, bucket-sorted, one file per bucket) — the layout
     an ingest job would write once so that every downstream join on
     the order key reuses the write-time shuffle forever."""
     tag = _hashlib.md5(sf_dir.encode()).hexdigest()[:8]
     to, tl = f"deps_buck_orders_{tag}", f"deps_buck_lineitem_{tag}"
-    if (
-        sf_dir in _BUCK_STAGED
-        and spark.catalog.tableExists(to)
-        and spark.catalog.tableExists(tl)
-    ):
-        return to, tl
     from dataengineeringproject_spark.schemas import load_table
     from dataengineeringproject_spark.sources import layout
 
-    d = _tempfile.mkdtemp(prefix="deps_buck_ol_")
+    d = scratch_dir("deps_buck_ol_")
     layout.write_bucketed(
         load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority"),
         to,
@@ -382,9 +324,17 @@ def _staged_bucketed_ol(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
         8,
         path=f"{d}/lineitem",
     )
-    _BUCK_DIRS.append(d)
-    _BUCK_STAGED[sf_dir] = (to, tl)
     return to, tl
+
+
+def _staged_bucketed_ol(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
+    """The staged bucketed table names, re-staged when the session
+    catalog no longer has them (a new session's in-memory catalog
+    starts empty; the bucket spec lives only there)."""
+    to, tl = _stage_bucketed_ol(spark, sf_dir)
+    if spark.catalog.tableExists(to) and spark.catalog.tableExists(tl):
+        return to, tl
+    return _stage_bucketed_ol.__wrapped__(spark, sf_dir)
 
 
 register_prestage(_staged_bucketed_ol)

@@ -68,7 +68,7 @@ def test_streaming_gate_writes_are_batch_keyed(spark):
     from dataengineeringproject_spark.queries import llm_text as L
 
     L.streaming_corpus_release_gate(spark, SF).collect()
-    out = Path(L._GATE_STREAM_RESULT[SF])
+    out = Path(L._run_gate_stream(spark, SF)[0])
     batches = sorted(p.name for p in out.iterdir() if p.name.startswith("b="))
     assert batches == [f"b={i}" for i in range(L._GATE_STREAM_SLICES)]
 
@@ -83,8 +83,7 @@ def test_streaming_gate_replay_is_idempotent(spark):
         tuple(r)
         for r in L.streaming_corpus_release_gate(spark, SF).collect()
     }
-    out = L._GATE_STREAM_RESULT[SF]
-    idx = L._GATE_STREAM_IDX[SF]
+    out, idx = L._run_gate_stream(spark, SF)
     last = L._GATE_STREAM_SLICES - 1
 
     land = L._staged_gate_stream_land(spark, SF)

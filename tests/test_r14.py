@@ -46,22 +46,6 @@ def test_source_fingerprint_directory_layout(tmp_path):
     shutil.rmtree(d)
 
 
-def test_staged_caches_keyed_by_fingerprint():
-    """The three r13 staged producers must key their in-process caches
-    by content fingerprint, not bare sf_dir path (ADVICE r13)."""
-    import inspect
-
-    from dataengineeringproject_spark.queries import curation, llm_text
-
-    for fn in (
-        llm_text._staged_tokset,
-        llm_text._staged_docg,
-        curation._staged_fuz_keys,
-    ):
-        src = inspect.getsource(fn)
-        assert "source_fingerprint" in src, fn.__name__
-
-
 def test_prestage_returns_per_hook_timings(spark):
     """registry.prestage returns {hook_name: wall_sec} so bench
     artifacts can record staging cost (ADVICE r13)."""

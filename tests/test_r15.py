@@ -8,6 +8,7 @@ bench drift control."""
 from __future__ import annotations
 
 import os
+from datetime import datetime
 
 import pytest
 
@@ -55,26 +56,92 @@ def test_fingerprint_token_content_addressed():
     assert all(c in "0123456789abcdef" for c in fingerprint_token(k1))
 
 
-def test_staged_tokset_restages_on_source_rewrite(spark, tmp_path):
+def _docs_fixture(spark, n):
+    return spark.createDataFrame(
+        [(i, f"alpha beta gamma delta epsilon doc {i}", "s") for i in range(n)],
+        "doc_id long, text string, source string",
+    )
+
+
+def _events_fixture(spark, n):
+    return spark.createDataFrame(
+        [
+            (i, datetime(2024, 1, 1 + i), i % 3, "click", float(i), None)
+            for i in range(n)
+        ],
+        "event_id long, ts timestamp, user_id long, event_type string, "
+        "value double, props string",
+    )
+
+
+@pytest.mark.parametrize(
+    "module, producer, table, fixture, n_ids",
+    [
+        (
+            "llm_text", "_staged_tokset", "documents", _docs_fixture,
+            lambda spark, p: spark.read.parquet(p).select("doc_id").distinct().count(),
+        ),
+        (
+            "sources_q", "_staged_csv_events", "events", _events_fixture,
+            lambda spark, p: spark.read.option("header", "true").csv(p).count(),
+        ),
+        (
+            "streaming_q", "_staged_events", "events", _events_fixture,
+            lambda spark, p: spark.read.parquet(p).count(),
+        ),
+    ],
+    ids=["_staged_tokset", "_staged_csv_events", "_staged_events"],
+)
+def test_staged_producer_restages_on_source_rewrite(
+    spark, tmp_path, module, producer, table, fixture, n_ids
+):
     """BEHAVIORAL fingerprint-keyed staging (ADVICE r14): stage
     against a tmp fixture, rewrite the source parquet, and assert the
     producer returns a NEW staged artifact — not the stale cache."""
-    from dataengineeringproject_spark.queries.llm_text import _staged_tokset
+    import importlib
 
+    fn = getattr(
+        importlib.import_module(f"dataengineeringproject_spark.queries.{module}"),
+        producer,
+    )
     sf = str(tmp_path)
-    docs = spark.createDataFrame(
-        [(i, f"alpha beta gamma delta epsilon doc {i}", "s") for i in range(8)],
-        "doc_id long, text string, source string",
+    src = fixture(spark, 8)
+    src.coalesce(1).write.mode("overwrite").parquet(f"{sf}/{table}.parquet")
+    p1 = fn(spark, sf)
+    assert fn(spark, sf) == p1  # unchanged source -> cached
+    src.limit(4).coalesce(1).write.mode("overwrite").parquet(
+        f"{sf}/{table}.parquet"
     )
-    docs.coalesce(1).write.mode("overwrite").parquet(f"{sf}/documents.parquet")
-    p1 = _staged_tokset(spark, sf)
-    assert _staged_tokset(spark, sf) == p1  # unchanged source -> cached
-    docs.limit(4).coalesce(1).write.mode("overwrite").parquet(
-        f"{sf}/documents.parquet"
-    )
-    p2 = _staged_tokset(spark, sf)
+    p2 = fn(spark, sf)
     assert p2 != p1
-    assert spark.read.parquet(p2).select("doc_id").distinct().count() == 4
+    assert n_ids(spark, p2) == 4
+
+
+def test_queries_leave_scratch_dirs_and_cleanup_to_registry():
+    """Regrowth guard: staged artifacts and stream outputs get their
+    dirs from registry.scratch_dir and their cleanup from its single
+    atexit hook — no query module makes temp dirs or exit hooks of its
+    own, and no other package module registers an exit hook."""
+    import ast
+    from pathlib import Path
+
+    import dataengineeringproject_spark as pkg
+
+    root = Path(pkg.__file__).parent
+    for f in sorted(root.rglob("*.py")):
+        names = set()
+        for node in ast.walk(ast.parse(f.read_text())):
+            if isinstance(node, ast.Import):
+                names |= {a.name for a in node.names}
+            elif isinstance(node, ast.ImportFrom):
+                names |= {node.module} | {a.name for a in node.names}
+            elif isinstance(node, ast.Attribute):
+                names.add(node.attr)
+        rel = f.relative_to(root).as_posix()
+        if rel != "registry.py":
+            assert "atexit" not in names, rel
+        if rel.startswith("queries/"):
+            assert "mkdtemp" not in names, rel
 
 
 def test_staged_fuz_keys_table_name_content_addressed(spark, tmp_path):

@@ -220,6 +220,22 @@ def test_cc_chain_converges_within_log_rounds(spark):
     assert all(r.component == 0 for r in rows)
 
 
+def test_reset_stats_rejects_frames_without_jvm_handles():
+    """_reset_stats rebuilds frames through classic-session internals;
+    a frame without them (a Spark Connect DataFrame, here a stand-in
+    lacking _jdf) must fail with an error naming Spark Connect, not an
+    AttributeError from deep inside the operator."""
+    from types import SimpleNamespace
+
+    import pytest
+
+    from dataengineeringproject_spark.operators.graph import _reset_stats
+
+    stand_in = SimpleNamespace(sparkSession=SimpleNamespace())
+    with pytest.raises(RuntimeError, match="Spark Connect"):
+        _reset_stats(stand_in)
+
+
 def test_cc_equals_plain_propagation_on_random_graph(spark):
     """Fixpoint identity: compression changes the ROUND COUNT, never
     the labels — compare against plain propagation on a deterministic
@@ -288,13 +304,13 @@ def test_basket_triples_equal_double_self_join(spark):
 
 
 def test_basket_weighted_pairs_equal_self_join(spark):
-    """_PAIR_EXPAND with a (sa, sb) count must equal the weighted
+    """_pair_expand with a (sa, sb) count must equal the weighted
     self-join pair pass (_lift_pairs' w grain), including orders with
     a single distinct item (no pairs) and the basket-count/degree
     frames derived from the same aggregate."""
     from dataengineeringproject_spark.queries.graph_q import (
-        _PAIR_EXPAND,
         _baskets,
+        _pair_expand,
     )
     from dataengineeringproject_spark.schemas import load_table
 
@@ -310,7 +326,7 @@ def test_basket_weighted_pairs_equal_self_join(spark):
     )
     bk = _baskets(li, "l_suppkey")
     new = (
-        bk.select(F.explode(F.expr(_PAIR_EXPAND)).alias("pr"))
+        bk.select(F.explode(_pair_expand("items", "sa", "sb")).alias("pr"))
         .groupBy(F.col("pr.sa").alias("sa"), F.col("pr.sb").alias("sb"))
         .agg(F.count(F.lit(1)).alias("w"))
     )
