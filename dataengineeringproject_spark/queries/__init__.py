@@ -3,13 +3,9 @@
 
 from __future__ import annotations
 
-_LOADED = False
-
 
 def load() -> None:
-    global _LOADED
-    if _LOADED:
-        return
+    """Import every query module (a no-op after the first call)."""
     from dataengineeringproject_spark.queries import (  # noqa: F401
         advanced,
         curation,
@@ -25,5 +21,3 @@ def load() -> None:
         tpch_extra,
         windows_q,
     )
-
-    _LOADED = True

@@ -3,15 +3,13 @@
 1. bench.py times EVERY registered query (VERDICT r9 item 3: 159
    registered queries previously had no bench row) — HEADLINE first in
    its historical order, then the rest by name, no duplicates.
-2. tools/start_round.py detects a SPENT _PRIORITY_R* list (every entry
-   green in the newest CORRECTNESS file) and warns (ADVICE r9).
+2. streaming_corpus_release_gate is registered with a full value-hash
+   oracle next to its batch twin (VERDICT r9 item 6).
 """
 
 from __future__ import annotations
 
 import json
-import subprocess
-import sys
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
@@ -41,47 +39,6 @@ def test_headline_names_are_all_registered():
 
     missing = [n for n in bench.HEADLINE if n not in registry.queries()]
     assert missing == [], missing
-
-
-def test_start_round_detects_spent_pin_list(tmp_path):
-    """spent_pin_lists() flags a _PRIORITY_R* list whose every entry is
-    green in the newest CORRECTNESS file, and ignores one that is not.
-
-    VERDICT r10 item 1: runs ONLY on synthetic fixtures — live repo
-    state flips the moment the driver delivers a CORRECTNESS file, so
-    asserting it makes the test red by construction every hand-off."""
-    sys.path.insert(0, str(REPO / "tools"))
-    try:
-        import start_round
-    finally:
-        sys.path.pop(0)
-
-    corr = tmp_path / "CORRECTNESS_r99.json"
-    corr.write_text(json.dumps({
-        "alpha": {"rows_match": True, "err": None},
-        "beta": {"rows_match": True, "err": None},
-        "gamma": {"rows_match": False, "err": "boom"},
-    }))
-    spent_src = '_PRIORITY_R98: list[str] = [\n    "alpha",\n    "beta",\n]\n'
-    live_src = '_PRIORITY_R98: list[str] = [\n    "alpha",\n    "gamma",\n]\n'
-
-    spent = dict(start_round.spent_pin_lists(corr, spent_src))
-    assert spent == {"_PRIORITY_R98": ["alpha", "beta"]}
-    assert dict(start_round.spent_pin_lists(corr, live_src)) == {}
-
-
-def test_start_round_check_mode_is_side_effect_free():
-    """--check must not modify registry.py."""
-    reg = REPO / "dataengineeringproject_spark" / "registry.py"
-    before = reg.read_text()
-    proc = subprocess.run(
-        [sys.executable, str(REPO / "tools" / "start_round.py"), "--check"],
-        capture_output=True,
-        text=True,
-        timeout=120,
-    )
-    assert proc.returncode == 0, proc.stderr
-    assert reg.read_text() == before
 
 
 def test_streaming_release_gate_registered_with_oracle():

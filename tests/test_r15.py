@@ -97,8 +97,11 @@ def test_staged_producer_restages_on_source_rewrite(
 ):
     """BEHAVIORAL fingerprint-keyed staging (ADVICE r14): stage
     against a tmp fixture, rewrite the source parquet, and assert the
-    producer returns a NEW staged artifact — not the stale cache."""
+    producer returns a NEW staged artifact — not the stale cache — and
+    that the superseded generation's scratch dirs are removed."""
     import importlib
+
+    from dataengineeringproject_spark import registry
 
     fn = getattr(
         importlib.import_module(f"dataengineeringproject_spark.queries.{module}"),
@@ -107,7 +110,10 @@ def test_staged_producer_restages_on_source_rewrite(
     sf = str(tmp_path)
     src = fixture(spark, 8)
     src.coalesce(1).write.mode("overwrite").parquet(f"{sf}/{table}.parquet")
+    before = set(registry._SCRATCH)
     p1 = fn(spark, sf)
+    gen1 = set(registry._SCRATCH) - before
+    assert any(p1.startswith(d) for d in gen1)
     assert fn(spark, sf) == p1  # unchanged source -> cached
     src.limit(4).coalesce(1).write.mode("overwrite").parquet(
         f"{sf}/{table}.parquet"
@@ -115,6 +121,37 @@ def test_staged_producer_restages_on_source_rewrite(
     p2 = fn(spark, sf)
     assert p2 != p1
     assert n_ids(spark, p2) == 4
+    gen2 = set(registry._SCRATCH) - before
+    assert not any(os.path.exists(d) for d in gen1)
+    assert gen2 and not gen2 & gen1
+    assert all(os.path.isdir(d) for d in gen2)
+
+
+def test_staged_restage_keeps_nested_producers_dirs(tmp_path):
+    """A scratch dir belongs to the innermost running producer: when an
+    outer producer re-stages on its own source rewrite, a nested
+    producer whose source is unchanged keeps its live dir, and the outer
+    producer's superseded dir is removed."""
+    from dataengineeringproject_spark.registry import scratch_dir, staged
+
+    (tmp_path / "events.parquet").write_bytes(b"e")
+    (tmp_path / "documents.parquet").write_bytes(b"d")
+
+    @staged("events")
+    def inner(spark, sf_dir):
+        return scratch_dir("test_inner_")
+
+    @staged("documents")
+    def outer(spark, sf_dir):
+        return inner(spark, sf_dir), scratch_dir("test_outer_")
+
+    sf = str(tmp_path)
+    i1, o1 = outer(None, sf)
+    (tmp_path / "documents.parquet").write_bytes(b"dd")
+    i2, o2 = outer(None, sf)
+    assert i2 == i1 and os.path.isdir(i1)
+    assert o2 != o1 and os.path.isdir(o2)
+    assert not os.path.exists(o1)
 
 
 def test_queries_leave_scratch_dirs_and_cleanup_to_registry():

@@ -14,9 +14,9 @@
    test x train dimension-keyed join is all-pairs) and its scalable
    LSH-bucket twin knn_classifier_eval_lsh is registered scalable
    with an oracle — the exact/index pair is the recall trade study.
-4. The round-9 priority front-list actually front-loads the sweep:
-   the first entries of queries() are the pinned never-checked /
-   changed-oracle queries, embedding_standardize first.
+4. The correctness-sweep order is derived from the CORRECTNESS_r*.json
+   files: never-green queries first, then stalest newest-green round
+   first (fixture rules, plus the live order of queries()).
 """
 
 from __future__ import annotations
@@ -174,14 +174,46 @@ def test_knn_scale_classes_and_twin_registered():
     assert "knn_classifier_eval_lsh" in registry.oracle_sql()
 
 
-def test_priority_pin_mechanism_orders_sweep():
-    """VERDICT r9 item 8: assert the pin *mechanism*, not a specific
-    round's list — the current _PRIORITY_PINS entries (whatever round's
-    list is active, possibly empty) come first and in list order."""
+def test_sweep_order_derived_from_correctness_files(tmp_path):
+    """The sweep tiers come from CORRECTNESS_r<N>.json rows: green is
+    hash_match, or rows_match with no error; the newest green round
+    wins by number (r10 over r9, though "r10" sorts first as a name);
+    never-green queries lead; registration order holds within a tier."""
+    import json
+
+    from dataengineeringproject_spark import registry
+
+    ok = {"rows_match": True, "hash_match": True, "err": None}
+    rows_only = {"rows_match": True, "err": None}
+    failed = {"rows_match": True, "hash_match": False, "err": "boom"}
+    corr = tmp_path / "corr"
+    corr.mkdir()
+    (corr / "CORRECTNESS_r9.json").write_text(json.dumps(
+        {"a": ok, "b": rows_only, "c": failed, "d": ok}
+    ))
+    (corr / "CORRECTNESS_r10.json").write_text(json.dumps(
+        {"a": failed, "b": failed, "d": rows_only}
+    ))
+    (corr / "CORRECTNESS_r10_c8.json").write_text("{}")
+    assert registry._last_green_round(corr) == {"a": 9, "b": 9, "d": 10}
+    names = ["d", "a", "c", "e", "b"]
+    assert registry._sweep_order(names, corr) == ["c", "e", "a", "b", "d"]
+
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    assert registry._last_green_round(empty) == {}
+    assert registry._sweep_order(names, empty) == names
+
+
+def test_queries_sweep_stalest_green_round_first():
+    """Live order over the repo's own CORRECTNESS files: queries() is
+    non-decreasing in derived newest-green round, and oracle_sql()
+    lists the same names in the same order. Holds for any set of
+    CORRECTNESS files, so a new one never turns it red."""
     from dataengineeringproject_spark import registry
 
     order = list(registry.queries())
-    pins = registry._PRIORITY_PINS
-    assert order[: len(pins)] == pins
-    # every pinned name must actually be a registered query
-    assert set(pins) <= set(order)
+    last = registry._last_green_round()
+    rounds = [last.get(n, 0) for n in order]
+    assert rounds == sorted(rounds)
+    assert list(registry.oracle_sql()) == order
