@@ -82,43 +82,6 @@ def agg_mode(
     )
 
 
-def mode_sql(
-    source_sql: str,
-    keys: Sequence[str],
-    value: str,
-    on_tie: Literal["min", "null"] = "min",
-    alias: str | None = None,
-) -> str:
-    """ANSI-SQL twin of `agg_mode` for the DuckDB oracle — kept adjacent
-    so Spark and oracle semantics cannot drift."""
-    out = alias or f"mode_{value}"
-    k = ", ".join(keys)
-    base = f"""
-    WITH src AS ({source_sql}),
-    c AS (
-      SELECT {k}, {value} AS v, count(*) AS cnt
-      FROM src WHERE {value} IS NOT NULL
-      GROUP BY {k}, {value}
-    ),
-    cm AS (
-      SELECT *, max(cnt) OVER (PARTITION BY {k}) AS maxc FROM c
-    ),
-    r AS (
-      SELECT {k}, v, cnt,
-             row_number() OVER (PARTITION BY {k} ORDER BY cnt DESC, v ASC) AS rn,
-             count(*) FILTER (WHERE cnt = maxc) OVER (PARTITION BY {k}) AS n_at_max
-      FROM cm
-    )
-    """
-    if on_tie == "min":
-        return base + f"SELECT {k}, v AS {out} FROM r WHERE rn = 1"
-    return (
-        base
-        + f"SELECT {k}, CASE WHEN n_at_max > 1 THEN NULL ELSE v END AS {out} "
-        + "FROM r WHERE rn = 1"
-    )
-
-
 def salted_agg(
     df: DataFrame,
     keys: Sequence[str],

@@ -3,19 +3,17 @@ with Kafka + Parquet").
 
 The streaming pipeline shape is: Kafka topic → from_json(value) →
 the same transformations the file-drop source feeds (streaming/daily.py)
-→ Parquet/Kafka sink with checkpointing. These builders produce that
-plan; they are exercised end-to-end in environments with the
-spark-sql-kafka connector on the classpath. THIS container ships no
-Kafka connector jar and no broker, so `.load()`/`.start()` here raises
-Spark's missing-data-source error — the builders are still the
-engine's Kafka contract (and the JSON row codec is unit-tested against
-static DataFrames, which is where the semantics live).
+→ a checkpointed sink. The source builder produces the first half of
+that plan; it is exercised end-to-end in environments with the
+spark-sql-kafka connector on the classpath. Without the connector jar
+(or a broker), `.load()` raises Spark's missing-data-source error — the
+builder is still the engine's Kafka contract, and the JSON row codec
+(`decode_json_rows`/`encode_json_rows`) is unit-tested against static
+DataFrames, which is where the semantics live.
 
 Scale posture: one Kafka partition maps to one Spark task —
 `minPartitions` can fan out further; `maxOffsetsPerTrigger` bounds
-micro-batch size (backpressure). The sink is exactly-once into Parquet
-via checkpointed offsets + idempotent file commits; into Kafka it is
-at-least-once.
+micro-batch size (backpressure).
 """
 
 from __future__ import annotations
@@ -69,38 +67,3 @@ def encode_json_rows(df: DataFrame, key_col: str | None = None) -> DataFrame:
     if key_col is None:
         return df.select(value)
     return df.select(F.col(key_col).cast("string").alias("key"), value)
-
-
-def write_kafka_stream(
-    df: DataFrame,
-    bootstrap_servers: str,
-    topic: str,
-    checkpoint_dir: str,
-    key_col: str | None = None,
-    output_mode: str = "update",
-):
-    """writeStream into a Kafka topic (at-least-once; checkpointed)."""
-    return (
-        encode_json_rows(df, key_col)
-        .writeStream.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap_servers)
-        .option("topic", topic)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode(output_mode)
-        .start()
-    )
-
-
-def write_parquet_stream(
-    df: DataFrame, path: str, checkpoint_dir: str, output_mode: str = "append"
-):
-    """writeStream into partitioned Parquet (exactly-once via
-    checkpointed offsets + idempotent commits) — the bronze landing
-    zone of the medallion layout."""
-    return (
-        df.writeStream.format("parquet")
-        .option("path", path)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode(output_mode)
-        .start()
-    )

@@ -30,15 +30,6 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
-def read_json(
-    spark: SparkSession, path: str, schema: T.StructType | None = None
-) -> DataFrame:
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.json(path)
-
-
 def read_orc(spark: SparkSession, path: str) -> DataFrame:
     """ORC scan — same columnar pushdown/pruning properties as parquet
     (vectorized reader, predicate pushdown); supported so the engine

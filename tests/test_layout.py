@@ -282,6 +282,31 @@ def test_zorder_clusters_both_dimensions(spark, tmp_path):
     assert spark.read.parquet(z_path).count() == n
 
 
+def test_write_zordered_sorts_each_file_by_morton_key(spark, tmp_path):
+    """write_zordered (SURVEY.md API) returns its path, keeps every row,
+    and writes each file's rows in non-decreasing Morton order of the
+    two columns (bit i of col_a at key bit 2i, of col_b at 2i+1)."""
+    pa_parquet = pytest.importorskip("pyarrow.parquet")
+    import glob
+
+    df = spark.range(200).select(
+        ((F.col("id") * 37) % 64).alias("a"), ((F.col("id") * 11) % 64).alias("b")
+    ).repartition(2)
+    path = layout.write_zordered(df, str(tmp_path / "z"), "a", "b", bits=6)
+    assert path == str(tmp_path / "z")
+
+    def morton(a, b):
+        return sum(((a >> i) & 1) << (2 * i) | ((b >> i) & 1) << (2 * i + 1) for i in range(6))
+
+    rows = []
+    for f in glob.glob(path + "/part-*.parquet"):
+        t = pa_parquet.read_table(f).to_pydict()
+        keys = [morton(a, b) for a, b in zip(t["a"], t["b"])]
+        assert keys == sorted(keys)
+        rows += zip(t["a"], t["b"])
+    assert sorted(rows) == sorted((r.a, r.b) for r in df.collect())
+
+
 def test_aqe_splits_skewed_join_at_runtime(spark, tmp_path):
     """AQE skew-join is the RUNTIME complement of the declarative
     operators/relational.salted_join: with adaptive execution on and

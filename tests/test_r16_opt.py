@@ -12,10 +12,15 @@ optimizations changed (OPTIMIZATION_r16.md).
    the |P|-sized deg frame (ADVICE r15 medium: driver OOM at 100 TB);
    the auto switch's DECISION is asserted on the saturated fixture in
    test_r15_opt.py (strengthened there, ADVICE r15 low).
+3. connected_components must give the plain-propagation labels on both
+   of its paths: the one-task union-find (edge count at or below
+   graph._LOCAL_MAX_EDGES) and the distributed min-label loop with
+   label compression (forced here by patching the bound to -1).
 """
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -196,28 +201,64 @@ def _plain_cc(spark, nodes, edges, max_iter=200):
     return labels
 
 
-def test_cc_chain_converges_within_log_rounds(spark):
-    """A 64-node chain has diameter 64: plain propagation at the
-    operator's max_iter=25 would TRUNCATE (RuntimeWarning); the
-    compressed operator must fully converge (all labels 0) without
-    warning — the pointer-jumping round-count guarantee."""
-    import warnings
+@pytest.fixture(params=["local", "distributed"])
+def cc(request, monkeypatch):
+    """connected_components pinned to one path: the default bound for
+    the one-task path, -1 for the distributed loop (so even an empty
+    edge set takes the loop). Asserts the path the call actually took
+    (only the one-task path ships the package to workers)."""
+    from dataengineeringproject_spark.operators import graph
 
-    from dataengineeringproject_spark.operators.graph import (
-        connected_components,
+    if request.param == "distributed":
+        monkeypatch.setattr(graph, "_LOCAL_MAX_EDGES", -1)
+    return _path_checked(graph, monkeypatch, request.param)
+
+
+def _path_checked(graph, monkeypatch, path):
+    shipped = []
+    real = graph.ensure_package_on_workers
+    monkeypatch.setattr(
+        graph,
+        "ensure_package_on_workers",
+        lambda spark: (shipped.append(1), real(spark)),
     )
+
+    def run(nodes, edges, **kw):
+        shipped.clear()
+        out = {
+            (r.id, r.component)
+            for r in graph.connected_components(nodes, edges, **kw).collect()
+        }
+        assert bool(shipped) == (path == "local"), path
+        return out
+
+    run.path = path
+    return run
+
+
+def _plain_set(spark, nodes, edges):
+    return {(r.id, r.component) for r in _plain_cc(spark, nodes, edges).collect()}
+
+
+def test_cc_chain_converges_within_log_rounds(spark, cc):
+    """A 64-node chain has diameter 64: plain propagation at the
+    operator's max_iter=25 would TRUNCATE; the compressed loop must
+    fully converge (all labels 0) without a RuntimeWarning — the
+    pointer-jumping round-count guarantee — and strict=True must not
+    raise. The one-task path always reaches its fixpoint, so it
+    converges even with max_iter=1."""
+    import warnings
 
     n = 64
     nodes = spark.range(n).select(F.col("id"))
     edges = spark.range(n - 1).select(
         F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b")
     )
+    max_iter = 1 if cc.path == "local" else 25
     with warnings.catch_warnings():
         warnings.simplefilter("error", RuntimeWarning)
-        labels = connected_components(nodes, edges)
-        rows = labels.collect()
-    assert len(rows) == n
-    assert all(r.component == 0 for r in rows)
+        got = cc(nodes, edges, max_iter=max_iter, strict=True)
+    assert got == {(i, 0) for i in range(n)}
 
 
 def test_reset_stats_rejects_frames_without_jvm_handles():
@@ -236,14 +277,11 @@ def test_reset_stats_rejects_frames_without_jvm_handles():
         _reset_stats(stand_in)
 
 
-def test_cc_equals_plain_propagation_on_random_graph(spark):
-    """Fixpoint identity: compression changes the ROUND COUNT, never
-    the labels — compare against plain propagation on a deterministic
-    pseudo-random multi-component graph."""
-    from dataengineeringproject_spark.operators.graph import (
-        connected_components,
-    )
-
+def test_cc_equals_plain_propagation_on_random_graph(spark, cc):
+    """Fixpoint identity: compression changes the ROUND COUNT and the
+    one-task union-find the job count, never the labels — compare
+    against plain propagation on a deterministic pseudo-random
+    multi-component graph."""
     n = 500
     nodes = spark.range(n).select(F.col("id"))
     # deterministic scatter edges: several mid-size components + isolates
@@ -255,15 +293,85 @@ def test_cc_equals_plain_propagation_on_random_graph(spark):
         )
         .filter(F.col("id_a") != F.col("id_b"))
     )
-    got = {
-        (r.id, r.component)
-        for r in connected_components(nodes, edges).collect()
-    }
+    assert cc(nodes, edges) == _plain_set(spark, nodes, edges)
+
+
+@pytest.mark.parametrize("slack, path", [(0, "local"), (-1, "distributed")])
+def test_cc_path_switches_at_the_edge_bound(spark, monkeypatch, slack, path):
+    """A 10-node chain has 18 distinct directed edges: a bound of 18
+    keeps it on the one-task path, 17 sends it to the distributed
+    loop; both give the plain-propagation labels."""
+    from dataengineeringproject_spark.operators import graph
+
+    nodes = spark.range(10).select(F.col("id"))
+    edges = spark.range(9).select(
+        F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b")
+    )
+    monkeypatch.setattr(graph, "_LOCAL_MAX_EDGES", 18 + slack)
+    run = _path_checked(graph, monkeypatch, path)
+    assert run(nodes, edges) == _plain_set(spark, nodes, edges)
+
+
+def test_cc_string_ids(spark, cc):
+    """String ids: the one-task path takes its output type from the
+    edge frame and ranks ids as Spark's min does."""
+    nodes = spark.createDataFrame(
+        [(x,) for x in ["d1", "d2", "d10", "b", "a", "zz", "Z"]], "id string"
+    )
+    edges = spark.createDataFrame(
+        [("d2", "d10"), ("d10", "b"), ("zz", "Z")], "id_a string, id_b string"
+    )
     want = {
-        (r.id, r.component)
-        for r in _plain_cc(spark, nodes, edges).collect()
+        ("d1", "d1"), ("d2", "b"), ("d10", "b"), ("b", "b"), ("a", "a"),
+        ("zz", "Z"), ("Z", "Z"),
     }
-    assert got == want
+    assert cc(nodes, edges) == want == _plain_set(spark, nodes, edges)
+
+
+def test_cc_isolated_nodes_and_empty_edge_set(spark, cc):
+    """Nodes with no edge label themselves, also when there is no edge
+    at all."""
+    nodes = spark.range(6).select(F.col("id"))
+    edges = spark.createDataFrame([(1, 4)], "id_a long, id_b long")
+    assert cc(nodes, edges) == {(0, 0), (1, 1), (2, 2), (3, 3), (4, 1), (5, 5)}
+    no_edges = edges.limit(0)
+    assert cc(nodes, no_edges) == {(i, i) for i in range(6)}
+    assert cc(nodes, no_edges) == _plain_set(spark, nodes, no_edges)
+
+
+def test_cc_self_loops_duplicates_and_null_endpoints(spark, cc):
+    """Self-loops and repeated edges (both directions) change nothing;
+    an edge with a null endpoint is dropped, as the loop's join drops
+    it."""
+    nodes = spark.range(6).select(F.col("id"))
+    edges = spark.createDataFrame(
+        [(1, 1), (2, 3), (2, 3), (3, 2), (5, None), (None, 4), (4, 5)],
+        "id_a long, id_b long",
+    )
+    want = {(0, 0), (1, 1), (2, 2), (3, 2), (4, 4), (5, 4)}
+    assert cc(nodes, edges) == want == _plain_set(spark, nodes, edges)
+
+
+def test_min_labels_on_shuffled_chain_is_fast():
+    """The one-task labeller without Spark: a 100k-node chain under a
+    random id permutation (so ids along the chain are unordered and
+    hooking cannot follow the chain) collapses to one component labeled
+    by its min id, in well under a second."""
+    import time
+
+    import numpy as np
+
+    from dataengineeringproject_spark.operators.graph import _min_labels
+
+    n = 100_000
+    perm = np.random.default_rng(7).permutation(n) + 10
+    src, dst = perm[:-1], perm[1:]
+    t0 = time.perf_counter()
+    ids, comp = _min_labels(np.concatenate([src, dst]), np.concatenate([dst, src]))
+    elapsed = time.perf_counter() - t0
+    assert ids.tolist() == list(range(10, n + 10))
+    assert (comp == 10).all()
+    assert elapsed < 1.0, elapsed
 
 
 def test_basket_triples_equal_double_self_join(spark):
