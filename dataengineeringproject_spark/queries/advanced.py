@@ -7958,8 +7958,9 @@ _DBSCAN_MINPTS = 3  # neighbors (excluding self) within eps to be "core"
 # occupied cells / 1,500 points), so the 64 cap never binds there and
 # all provided-sf results are byte-identical (regression-pinned
 # DuckDB-only across sf0.001/0.01/0.1); the cap's bite at scale is
-# recorded by tools/probe_scale100.py as this family's honesty
-# metric.
+# this family's honesty metric, recorded in
+# probe_scale100_battery_r16.json (script: tools/probe_scale100.py,
+# last in commit 0cbd52b).
 _DBSCAN_CELLCAP = 64
 
 
@@ -8273,11 +8274,12 @@ def _dbscan_labels(spark: SparkSession, sf_dir: str):
     """Per-point DBSCAN assignment — (pt, lab) where lab is
     (user_id, cluster, is_core); noise points are pt rows absent from
     lab. Extracted from dbscan_clusters (r14, pure code motion — the
-    census derives from this frame) so tools/probe_scale100.py can
-    compute the capped-vs-uncapped cluster-assignment agreement metric
-    (VERDICT r13 item 3) by evaluating the SAME pipeline under a
-    monkeypatched _DBSCAN_CELLCAP, pricing what the cap costs in
-    assignment quality, not just dropped build mass."""
+    census derives from this frame) so the capped-vs-uncapped
+    cluster-assignment agreement metric (VERDICT r13 item 3) evaluates
+    the SAME pipeline under a monkeypatched _DBSCAN_CELLCAP, pricing
+    what the cap costs in assignment quality, not just dropped build
+    mass (ari_vs_uncapped in probe_scale100_battery_r16.json; script
+    tools/probe_scale100.py, last in commit 0cbd52b)."""
     from dataengineeringproject_spark.operators.graph import (
         connected_components,
     )

@@ -1130,8 +1130,9 @@ _FUZ_ROWS = 2   # minhashes concatenated per band key: P(collide) = J^_FUZ_ROWS
 # probe_scale100_battery_r12.json) yet the 257 output pairs are
 # row-identical to the uncapped run, hash-matched against the
 # mirrored oracle at sf0.001/0.01/0.1 in fresh sessions. Dropped-rep
-# mass at scale is recorded by tools/probe_scale100.py as this
-# query's honesty metric.
+# mass at scale is this query's honesty metric, recorded in
+# probe_scale100_battery_r14.json (script: tools/probe_scale100.py,
+# last in commit 0cbd52b).
 _FUZ_BUCKCAP = 256
 
 
@@ -1156,7 +1157,8 @@ def _staged_fuz_keys(spark: SparkSession, sf_dir: str) -> str:
     (32) by (band, bkey) and sorted by (band, bkey, doc_id) — the
     _FUZ_BUCKCAP window and the candidate self-join are BOTH keyed on
     (band, bkey), so the bucketed scan serves them shuffle-free.
-    Measured verdict (tools/exp_fuzzy_bkbucket.py, cold interleaved
+    Measured verdict (exp_fuzzy_bkbucket_{sf01,100x}_r14.json; script
+    tools/exp_fuzzy_bkbucket.py, last in commit 0cbd52b; cold interleaved
     subprocesses, output hash-identical across all 12 runs): sf0.1
     won EVERY pair — 8.75->3.67, 5.18->2.95, 4.98->3.73 s; 100x
     medians 30.3->24.6 s (the output-sized member expansion dilutes

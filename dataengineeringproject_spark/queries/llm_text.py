@@ -1308,9 +1308,10 @@ def _staged_sig_index(spark: SparkSession, sf_dir: str) -> str:
     never did): the accept step's candidate join BROADCASTS the batch
     bands and streams this index's scan with ZERO exchange on the
     index side (plan-verified at sf0.1), so there is no index-side
-    shuffle for bucketing to delete; the measured verdict
-    (tools/exp_sigindex_bucket.py, cold interleaved pairs at sf0.1 and
-    the 100x fixture) is recorded in exp_sigindex_bucket_*_r15.json.
+    shuffle for bucketing to delete; the measured verdict (cold
+    interleaved pairs at sf0.1 and the 100x fixture) is recorded in
+    exp_sigindex_bucket_{sf01,100x}_r15.json (script:
+    tools/exp_sigindex_bucket.py, last in commit 0cbd52b).
     At 100 TB the regime only changes if a daily batch outgrows the
     broadcast threshold — the bucketed layout becomes worth re-testing
     then, not before."""
@@ -2542,8 +2543,9 @@ def _staged_tokset_wb(spark: SparkSession, sf_dir: str) -> str:
     set-group representatives, the frame every heavy jaccard consumer
     actually reads — as an external spark_catalog table BUCKETED AND
     SORTED BY `w` (32 buckets), returning the table name (r14, VERDICT
-    r13 item 6). Measured verdict (tools/exp_jaccard_wbucket.py, cold
-    subprocess per measurement, interleaved variants, output
+    r13 item 6). Measured verdict (exp_jaccard_wbucket_{sf01,100x}_r14
+    .json; script tools/exp_jaccard_wbucket.py, last in commit 0cbd52b;
+    cold subprocess per measurement, interleaved variants, output
     hash-identical): at sf0.1 a wash inside ambient noise (medians
     ~13.3 vs ~13.9 s), at the 100x fixture the w-bucketed plan won
     EVERY interleaved pair — 225->92, 98->79, 112->65 s, median 1.55x
@@ -2682,15 +2684,16 @@ def jaccard_prefix_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     sorted by w) — the prefix-filter self-join and the document
     frequency aggregate read bucket-local partitions instead of
     shuffling the posting frame, which won every interleaved cold
-    pair at the 100x fixture (median 1.55x, tools/
-    exp_jaccard_wbucket.py). The r13 localCheckpoint is gone: a
+    pair at the 100x fixture (median 1.55x,
+    exp_jaccard_wbucket_100x_r14.json). The r13 localCheckpoint is gone: a
     checkpoint erases bucketing metadata, and each consumer re-reads
     the bucketed table instead (scan-cheap, shuffle-free on w).
 
     r15 (VERDICT r14 item 4): the remaining doc/gh-keyed verification
     joins were re-measured with a SECOND, doc_id-bucketed projection
-    of the rep tokset serving only them (tools/
-    exp_jaccard_dual_layout.py) — marginal (100x medians 61.1 vs
+    of the rep tokset serving only them
+    (exp_jaccard_dual_{sf01,100x}_r15.json; script
+    tools/exp_jaccard_dual_layout.py, last in commit 0cbd52b) — marginal (100x medians 61.1 vs
     54.3 s, one pair a statistical tie; sf0.1 a wash), NOT adopted:
     the verification joins are candidate-bounded, so a permanent 2x
     posting-table footprint buys ~10%. The w-bucketed single layout
@@ -3564,7 +3567,8 @@ _SSTR_L = 40  # window length = minimum duplicated-span length detected
 # fixture put ~4.5M rows into every concurrently-sorting task — the
 # probe measured 157 s (spill-bound) or a straight executor OOM on
 # the 8g heap, while the same plan at 256 partitions ran 114 s with
-# headroom (tools/probe_substr_decade.py; census proved every
+# headroom (probe_substr_decade_r15.json; script
+# tools/probe_substr_decade.py, last in commit 0cbd52b; census proved every
 # intermediate frame grows exactly ~10.8x per decade, so the 18.4x
 # decade was an execution-regime artifact, not candidate growth).
 # The plan therefore sizes its own gram-grain exchanges: windows are
@@ -3644,8 +3648,9 @@ def dedup_substring_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     collisions (~n²/2^65; ~5e-9 even at the 100x fixture's ~2e5
     distinct windows, and verified hash-identical against the
     text-keyed plan at sf0.1 AND 100x). Measured verdict
-    (tools/exp_substr_hashkey.py, cold interleaved subprocesses,
-    exp_substr_hashkey_{{sf01,100x}}_r14.json): sf0.1 a wash, 100x
+    (exp_substr_hashkey_{sf01,100x}_r14.json; script
+    tools/exp_substr_hashkey.py, last in commit 0cbd52b; cold
+    interleaved subprocesses): sf0.1 a wash, 100x
     339/341 -> 148/149 s (2.3x, both pairs) — at the third decade
     this query is shuffle-byte-bound and the 40-char key WAS the
     bottleneck. At a real 100 TB run, collision risk scales as the

@@ -3370,7 +3370,8 @@ _KNN_TRAIN = 70
 #
 # r12 (VERDICT r11 item 3): the 100x accuracy drop (0.55 -> 0.33 on
 # the 10x -> 100x fixtures) was measured to be CAP-INDUCED, not
-# fixture geometry — tools/probe_knn_recall.py: exact-kNN sample
+# fixture geometry — probe_knn_recall_r12.json (script:
+# tools/probe_knn_recall.py, last in commit 0cbd52b): exact-kNN sample
 # accuracy at 100x is 1.0 and uncapped same-bucket recall@3 is 0.98,
 # but recall@3 under a FIXED 128 cap is 0.008 (the cap keeps the
 # lowest train ids, cutting 98.5% of candidates). The cap therefore
@@ -3397,8 +3398,9 @@ _KNN_K = 3
 
 
 def _knn_lsh_cap(n_train: int) -> int:
-    """Python twin of the in-plan/oracle cap expression (used by
-    tools/probe_knn_recall.py to price the production cap)."""
+    """Python twin of the in-plan/oracle cap expression (it priced
+    the production cap in probe_knn_recall_r12.json; script
+    tools/probe_knn_recall.py, last in commit 0cbd52b)."""
     import math
 
     return _KNN_BUCKCAP * max(

@@ -895,8 +895,9 @@ _OVL_TOPK = 50
 # 100x where the cap bounds the join to ~2e8 candidates (~300x fewer).
 # The cap is SEMANTIC (a pair counts only if both sessions rank within
 # the cap in the bucket of their later start) and mirrored in the
-# oracle; dropped-session mass at scale is recorded by
-# tools/probe_scale100.py as the query's honesty metric.
+# oracle; dropped-session mass at scale is the query's honesty
+# metric, recorded in probe_scale100_r12.json (script:
+# tools/probe_scale100.py, last in commit 0cbd52b).
 _OVL_BUCKCAP = 256
 
 

@@ -158,10 +158,22 @@ def fingerprint_token(ck: tuple) -> str:
 
 
 _SCRATCH: list[str] = []
+# Dirs that live until exit whatever producer made them (process_dir).
+_PROCESS_DIRS: list[str] = []
 # One list per running `staged` producer, innermost last: a scratch dir
 # belongs to the producer that is running when it is made, so an outer
 # producer's re-stage never removes a nested producer's live artifact.
 _PRODUCING: list[list[str]] = []
+
+
+def process_dir(prefix: str) -> str:
+    """A fresh temp dir removed only at interpreter exit, never by a
+    re-stage: for files the live SparkContext serves for the rest of the
+    process (the package zip Python workers import), which must not
+    belong to whichever `staged` producer happens to be running."""
+    d = tempfile.mkdtemp(prefix=prefix)
+    _PROCESS_DIRS.append(d)
+    return d
 
 
 def scratch_dir(prefix: str) -> str:
@@ -187,6 +199,8 @@ def _remove_dirs(dirs: list[str]) -> None:
 @atexit.register
 def _remove_scratch() -> None:
     _remove_dirs(list(_SCRATCH))
+    for d in _PROCESS_DIRS:
+        shutil.rmtree(d, ignore_errors=True)
 
 
 def staged(*tables: str):

@@ -60,16 +60,18 @@ def ensure_package_on_workers(spark: SparkSession) -> None:
     import `dataengineeringproject_spark` themselves. The external
     driver builds its own SparkSession from an arbitrary cwd with no
     PYTHONPATH guarantees, so every Python-worker query ships a zip of
-    the package first (idempotent per session)."""
+    the package first (idempotent per session). The zip's dir is removed
+    at interpreter exit by the registry's cleanup hook."""
     sc = spark.sparkContext
     if getattr(sc, "_deps_pkg_shipped", False):
         return
     import pathlib
     import shutil
-    import tempfile
+
+    from dataengineeringproject_spark.registry import process_dir
 
     pkg_dir = pathlib.Path(__file__).resolve().parent
-    base = tempfile.mkdtemp(prefix="deps_pkg_") + "/dataengineeringproject_spark"
+    base = process_dir("deps_pkg_") + "/dataengineeringproject_spark"
     zip_path = shutil.make_archive(
         base, "zip", root_dir=str(pkg_dir.parent), base_dir=pkg_dir.name
     )

@@ -225,37 +225,15 @@ def run_to_memory(
 ) -> None:
     """Drive a streaming DataFrame to completion on all currently
     available input (availableNow) into an in-memory table named
-    `query_name` — the test/dev harness path.
-
-    Checkpoint placement (r15): a memory-sink availableNow run's
-    checkpoint (offset/commit WAL + state store files) is EPHEMERAL by
-    construction — the sink dies with the process, so the temp
-    checkpoint Spark would create under java.io.tmpdir has no recovery
-    value. $SPARK_GRAFT_STREAM_CKPT_BASE (e.g. /dev/shm) redirects it
-    to a RAM-backed dir, removed on completion. Opt-in env knob: unset
-    keeps Spark's stock temp-checkpoint behavior, and production jobs
-    (which need durable checkpoints) don't go through this runner."""
-    import shutil
-    import tempfile
-    import os
-
-    ckpt_base = os.environ.get("SPARK_GRAFT_STREAM_CKPT_BASE")
-    writer = (
+    `query_name` — the test/dev harness path."""
+    (
         stream.writeStream.outputMode(output_mode)
         .format("memory")
         .queryName(query_name)
         .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
     )
-    ckpt_dir = None
-    if ckpt_base and os.path.isdir(ckpt_base):
-        ckpt_dir = tempfile.mkdtemp(prefix=f"ckpt_{query_name}_", dir=ckpt_base)
-        writer = writer.option("checkpointLocation", ckpt_dir)
-    try:
-        q = writer.start()
-        q.awaitTermination()
-    finally:
-        if ckpt_dir is not None:
-            shutil.rmtree(ckpt_dir, ignore_errors=True)
 
 
 def sliding_means_stream(

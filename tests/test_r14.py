@@ -56,21 +56,3 @@ def test_prestage_returns_per_hook_timings(spark):
         isinstance(k, str) and isinstance(v, float) for k, v in t.items()
     )
     assert "_staged_tokset" in t
-
-
-def test_ari_contingency():
-    import sys
-    from pathlib import Path
-
-    sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "tools"))
-    from probe_scale100 import _ari_from_contingency
-
-    # identical partitions -> 1.0
-    assert _ari_from_contingency({(1, 1): 50, (2, 2): 50}) == pytest.approx(1.0)
-    # one point moved between two size-50 clusters -> high but < 1
-    near = _ari_from_contingency({(1, 1): 49, (1, 2): 1, (2, 2): 50})
-    assert 0.9 < near < 1.0
-    # everything merged on one side vs split on the other -> 0.0
-    assert _ari_from_contingency({(1, 1): 50, (1, 2): 50}) == pytest.approx(
-        0.0, abs=1e-9
-    )

@@ -131,8 +131,9 @@ def test_staged_restage_keeps_nested_producers_dirs(tmp_path):
     """A scratch dir belongs to the innermost running producer: when an
     outer producer re-stages on its own source rewrite, a nested
     producer whose source is unchanged keeps its live dir, and the outer
-    producer's superseded dir is removed."""
-    from dataengineeringproject_spark.registry import scratch_dir, staged
+    producer's superseded dir is removed. A process_dir (the package zip
+    the live SparkContext serves) belongs to no producer and stays."""
+    from dataengineeringproject_spark.registry import process_dir, scratch_dir, staged
 
     (tmp_path / "events.parquet").write_bytes(b"e")
     (tmp_path / "documents.parquet").write_bytes(b"d")
@@ -143,15 +144,16 @@ def test_staged_restage_keeps_nested_producers_dirs(tmp_path):
 
     @staged("documents")
     def outer(spark, sf_dir):
-        return inner(spark, sf_dir), scratch_dir("test_outer_")
+        return inner(spark, sf_dir), scratch_dir("test_outer_"), process_dir("test_proc_")
 
     sf = str(tmp_path)
-    i1, o1 = outer(None, sf)
+    i1, o1, p1 = outer(None, sf)
     (tmp_path / "documents.parquet").write_bytes(b"dd")
-    i2, o2 = outer(None, sf)
+    i2, o2, p2 = outer(None, sf)
     assert i2 == i1 and os.path.isdir(i1)
     assert o2 != o1 and os.path.isdir(o2)
     assert not os.path.exists(o1)
+    assert p2 != p1 and os.path.isdir(p1) and os.path.isdir(p2)
 
 
 def test_queries_leave_scratch_dirs_and_cleanup_to_registry():
@@ -179,6 +181,37 @@ def test_queries_leave_scratch_dirs_and_cleanup_to_registry():
             assert "atexit" not in names, rel
         if rel.startswith("queries/"):
             assert "mkdtemp" not in names, rel
+
+
+def test_package_zip_dir_removed_at_exit(tmp_path):
+    """The package zip that ensure_package_on_workers ships for a
+    mapInPandas lives in a `deps_pkg_*` dir that the registry's exit
+    hook removes: a process that ran one leaves none behind."""
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parent.parent
+    code = (
+        "import os, sys\n"
+        "from dataengineeringproject_spark.session import "
+        "ensure_package_on_workers, get_spark\n"
+        "spark = get_spark('deps_pkg_probe', shuffle_partitions=2)\n"
+        "ensure_package_on_workers(spark)\n"
+        "n = spark.range(10).mapInPandas(lambda it: it, 'id long').count()\n"
+        "assert n == 10, n\n"
+        "print(sorted(d for d in os.listdir(sys.argv[1]) "
+        "if d.startswith('deps_pkg_')))\n"
+    )
+    env = dict(os.environ, TMPDIR=str(tmp_path), SPARK_GRAFT_CPUS="2",
+               SPARK_GRAFT_DRIVER_MEM="1g", PYTHONPATH=str(root))
+    out = subprocess.run(
+        [sys.executable, "-c", code, str(tmp_path)], env=env, cwd=tmp_path,
+        capture_output=True, text=True, timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert "deps_pkg_" in out.stdout  # the zip dir existed while running
+    assert not [p.name for p in tmp_path.glob("deps_pkg_*")]
 
 
 def test_staged_fuz_keys_table_name_content_addressed(spark, tmp_path):
