@@ -10,9 +10,9 @@ HEADLINE subset; `value` is the full-fleet total.
 Each query is executed to completion with a collect() of the
 already-small results — every registered query returns grouped/top-k
 output, never raw rows at scale — so every output column is actually
-evaluated (count() prunes projections: the r10 SimHash lesson).
-SPARK_GRAFT_BENCH_ACTION=count restores the r1-r10 action for trend
-splicing; the emitted JSON carries an "action" key either way.
+evaluated (count() prunes projections: the r10 SimHash lesson). The
+emitted JSON carries "action": "collect" so it is never read against
+the r1-r10 count-action records (bench_out_count.json).
 
 `--scale-trend` mode (reproducible SURVEY §8.1 run): times the same
 headline set at sf0.01 AND sf0.1 in one session and prints one JSON
@@ -237,14 +237,12 @@ def _bench_set(qs) -> list[str]:
     return [n for n in HEADLINE if n in qs] + rest
 
 
-# Timing action. "collect" (default) materializes every output column
-# — it is what the external driver does with each result, and the r10
-# SimHash forensics proved count() silently PRUNES projected
-# expressions (a 12 s signature tree timed as 3 s). Results are small
-# (grouped/top-k) so driver transfer is noise. "count" is kept as an
-# env-var fallback (SPARK_GRAFT_BENCH_ACTION=count) so one dual run can
-# splice the r1-r10 count-action trend onto the collect-action series.
-BENCH_ACTION = os.environ.get("SPARK_GRAFT_BENCH_ACTION", "collect")
+# Timing action: collect() materializes every output column — it is
+# what the external driver does with each result, and the r10 SimHash
+# forensics proved count() silently PRUNES projected expressions (a
+# 12 s signature tree timed as 3 s). Results are small (grouped/top-k)
+# so driver transfer is noise. The tag goes into every record.
+BENCH_ACTION = "collect"
 
 
 def _drift_control(spark, qs) -> dict:
@@ -319,7 +317,7 @@ def _run_headline(spark, qs, sf_dir: str, names: list[str] | None = None) -> dic
     for name in names if names is not None else (n for n in HEADLINE if n in qs):
         t0 = time.perf_counter()
         df = qs[name](spark, sf_dir)
-        n = df.count() if BENCH_ACTION == "count" else len(df.collect())
+        n = len(df.collect())
         # Full precision here; rounding to 2 dp happens only at emit
         # time so derived stats (scale-trend ratios) never divide two
         # pre-rounded values (ADVICE r6: 0.01/0.01-scale quantization

@@ -11,7 +11,6 @@ from dataengineeringproject_spark.operators.cleaning import (
     dedup_keep_first,
     drop_unparseable,
     fill_with_median,
-    rename_columns,
 )
 from dataengineeringproject_spark.operators.dedup import (
     exact_dedup,
@@ -54,7 +53,6 @@ __all__ = [
     "dedup_keep_first",
     "drop_unparseable",
     "fill_with_median",
-    "rename_columns",
     "exact_dedup",
     "minhash_signatures",
     "lsh_candidate_pairs",

@@ -87,7 +87,6 @@ def salted_agg(
     keys: Sequence[str],
     aggs: dict[str, tuple[str, str]],
     salt_buckets: int = 16,
-    salt_on: str | None = None,
 ) -> DataFrame:
     """Skew-safe two-phase aggregation: groupBy(keys + salt) partial →
     groupBy(keys) final, for the decomposable aggregates sum/count/
@@ -106,15 +105,9 @@ def salted_agg(
     that is noise next to a straggler that runs 100× longer than its
     peers.
 
-    salt_on: column whose hash spreads the hot key's rows (defaults to
-    a uniform random-free spread via pmod(hash(all columns in keys +
-    monotonically varying input), ...) — we use spark_partition_id so
-    the salt is free to compute and already row-spread)."""
-    salt = (
-        F.pmod(F.hash(F.col(salt_on)), F.lit(salt_buckets))
-        if salt_on
-        else F.pmod(F.spark_partition_id(), F.lit(salt_buckets))
-    )
+    The salt is the input row's spark_partition_id mod salt_buckets:
+    free to compute and already row-spread."""
+    salt = F.pmod(F.spark_partition_id(), F.lit(salt_buckets))
     partial_aggs = []
     final_aggs = []
     for out, (kind, col) in aggs.items():

@@ -1,6 +1,7 @@
-"""Cleaning layer: P4-P7, E5 (SURVEY.md §2.2/§2.3).
+"""Cleaning layer: P4-P7 (SURVEY.md §2.2/§2.3). E5's bulk rename is
+`DataFrame.withColumnsRenamed` itself.
 
-Scale notes: clamp/rename are pure projections (no shuffle).
+Scale notes: clamp is a pure projection (no shuffle).
 `fill_with_median` is two passes — one aggregate to the driver (a
 handful of scalars, the engine's only sanctioned collect) + one
 projection; at 100 TB the aggregate is a single partial→final median.
@@ -101,8 +102,3 @@ def dedup_keep_first(
         .filter(F.col("__rn") == 1)
         .drop("__rn")
     )
-
-
-def rename_columns(df: DataFrame, mapping: Mapping[str, str]) -> DataFrame:
-    """E5: bulk rename (v5_group_project_dag.py:336-356)."""
-    return df.withColumnsRenamed(dict(mapping))

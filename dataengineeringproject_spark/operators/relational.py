@@ -51,10 +51,9 @@ def asof_join(
     left_ts: str,
     right_ts: str,
     right_cols: Sequence[str],
-    strict: bool = False,
 ) -> DataFrame:
     """As-of join: for each left row, the single most recent right row
-    with right_ts <= left_ts (or < when strict), matched on `on` keys.
+    with right_ts <= left_ts, matched on `on` keys.
     Spark has no native ASOF; this is the union-tag window composition:
     interleave both sides ordered by time, carry the last-seen right
     values forward, keep left rows. One shuffle on the key, one sort —
@@ -75,11 +74,10 @@ def asof_join(
         *[F.col(c).alias(f"__r_{c}") for c in right_cols],
     )
     unioned = l_tagged.unionByName(r_tagged)
-    # order: time asc, right rows before left rows at equal time unless strict
-    order = [F.col("__t").asc(), F.col("__is_left").asc() if not strict else F.col("__is_left").desc()]
+    # order: time asc, right rows before left rows at equal time
     w = (
         Window.partitionBy(*on)
-        .orderBy(*order)
+        .orderBy(F.col("__t").asc(), F.col("__is_left").asc())
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     carried = unioned.select(
@@ -153,7 +151,6 @@ def global_row_number(
     order_cols: Sequence[Column],
     out: str = "rn",
     tiebreak: Column | None = None,
-    durable: bool = False,
 ) -> DataFrame:
     """Distributed global 1-based row_number over a TOTAL ordering —
     the scalable replacement for `Window.orderBy(...)` with no
@@ -182,10 +179,8 @@ def global_row_number(
     ranks wrong), they sample DIFFERENT boundaries and the offsets no
     longer describe the partitioning the ranks were computed in. The
     checkpoint pins one evaluation, same as RDD zipWithIndex's
-    internal job. `durable=True` swaps it for a reliable checkpoint
-    (requires `sc.setCheckpointDir`) — the cluster-scale form, since a
-    localCheckpoint dies with its executor — this operator is the
-    explicit materialization cost of OPTIMIZE-style layout jobs.
+    internal job — this operator is the explicit materialization cost
+    of OPTIMIZE-style layout jobs.
 
     `tiebreak` (appended last to the ordering) is the caller's
     affirmation of totality: `order_cols` MUST be a total order or
@@ -209,18 +204,11 @@ def global_row_number(
             f"names {clash}; rename them first"
         )
     order_cols = list(order_cols) + ([tiebreak] if tiebreak is not None else [])
-    ranged = df.repartitionByRange(*order_cols).withColumn(
-        "__pid", F.spark_partition_id()
+    ranged = (
+        df.repartitionByRange(*order_cols)
+        .withColumn("__pid", F.spark_partition_id())
+        .localCheckpoint(eager=False)
     )
-    if durable:
-        if df.sparkSession.sparkContext.getCheckpointDir() is None:
-            raise ValueError(
-                "global_row_number(durable=True) needs "
-                "sparkContext.setCheckpointDir(...)"
-            )
-        ranged = ranged.checkpoint(eager=True)
-    else:
-        ranged = ranged.localCheckpoint(eager=False)
     w_local = Window.partitionBy("__pid").orderBy(*order_cols)
     local = ranged.withColumn("__lrn", F.row_number().over(w_local))
     # counts from the checkpointed frame directly — the offsets branch

@@ -26,6 +26,13 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
+# Every score is rounded to this many decimals before it is ranked or
+# thresholded (the registry's ROUND(x, 6) convention): both engines then
+# rank on the same value, so a last-bit summation difference cannot flip
+# a neighbour.
+_ROUND = 6
+
+
 def _plane_weight(plane: int, dim: int) -> float:
     """Deterministic pseudo-random weight in [-1, 1): md5(plane:dim)
     reduced mod 2001 → scaled. Pure Python so the same constants can be
@@ -95,7 +102,6 @@ def cosine_topk(
     vec_col: str,
     query_ids: list[int],
     k: int = 5,
-    round_to: int = 6,
 ) -> DataFrame:
     """Brute-force cosine top-k: for each query id, the k nearest other
     vectors. Ranking is on the ROUNDED cosine with id tie-break so the
@@ -122,7 +128,7 @@ def cosine_topk(
                 _cosine_pre(
                     F.col("qv"), F.col("v"), F.col("qnrm"), F.col("nrm")
                 ),
-                round_to,
+                _ROUND,
             ).alias("cosine"),
         )
     )
@@ -190,9 +196,7 @@ def ensure_min_parallelism(df: DataFrame, *key_cols: str) -> DataFrame:
     return df.repartition(par, *[F.col(c) for c in key_cols])
 
 
-def assign_nearest(
-    vecs: DataFrame, cents: DataFrame, id_col: str, round_to: int = 6
-) -> DataFrame:
+def assign_nearest(vecs: DataFrame, cents: DataFrame, id_col: str) -> DataFrame:
     """Assign every corpus vector to its nearest centroid (rounded
     cosine, cid tie-break). vecs: (id_col, v); cents: (cid, cv) →
     (id_col, cid).
@@ -228,7 +232,7 @@ def assign_nearest(
         F.nanvl(
             -F.round(
                 _cosine_pre(F.col("v"), F.col("cv"), F.col("__vn"), F.col("__cn")),
-                round_to,
+                _ROUND,
             ),
             F.lit(float("-inf")),
         ),
@@ -265,29 +269,27 @@ def kmeans_centroids(
     id_col: str,
     init_mod: int = 31,
     n_iters: int = 2,
-    round_to: int = 6,
-    init_cap: int = _INIT_CAP,
 ) -> DataFrame:
     """Lloyd's k-means over the corpus, fully deterministic so a SQL
     oracle can replay it: init = corpus sample (id % init_mod == 0,
-    capped to the first init_cap sample ids — see _INIT_CAP), then
+    capped to the first _INIT_CAP sample ids), then
     n_iters of [assign to nearest by rounded cosine → centroid =
     element-wise mean of assigned vectors, rounded]. Clusters that lose
     all members drop out (both engines drop them identically).
 
     Scale posture: each iteration is one broadcast-join assignment plus
     one shuffle keyed by (cid, dim) for the means — no driver collect;
-    centroid count is STRUCTURALLY ≤ init_cap, so the broadcast holds
+    centroid count is STRUCTURALLY ≤ _INIT_CAP, so the broadcast holds
     and training stays linear in the corpus at 100 TB.
     vecs: (id_col, v) → (cid, cv)."""
     cents = (
         vecs.filter(F.col(id_col) % init_mod == 0)
         .select(F.col(id_col).alias("cid"), F.col("v").alias("cv"))
         .orderBy("cid")
-        .limit(init_cap)
+        .limit(_INIT_CAP)
     )
     for _ in range(n_iters):
-        assign = assign_nearest(vecs, cents, id_col, round_to)
+        assign = assign_nearest(vecs, cents, id_col)
         exploded = assign.join(vecs, id_col).select(
             "cid", F.posexplode("v").alias("pos", "val")
         )
@@ -298,21 +300,18 @@ def kmeans_centroids(
             .agg(
                 F.transform(
                     F.array_sort(F.collect_list(F.struct("pos", "val"))),
-                    lambda s: F.round(s["val"], round_to),
+                    lambda s: F.round(s["val"], _ROUND),
                 ).alias("cv")
             )
         )
     return cents
 
 
-def kmeans_sql(
-    n_iters: int, init_mod: int = 31, round_to: int = 6,
-    init_cap: int = _INIT_CAP,
-) -> str:
+def kmeans_sql(n_iters: int, init_mod: int = 31) -> str:
     """DuckDB twin of `kmeans_centroids` as a CTE chain fragment.
     Assumes a CTE `v(vec_id, emb)` is already defined; emits CTEs
     `k0..k{n}` and expects the caller to read centroids from
-    `k{n_iters}(cid, cemb)`. The k0 sample carries the same init_cap
+    `k{n_iters}(cid, cemb)`. The k0 sample carries the same _INIT_CAP
     ceiling as the Spark side (see _INIT_CAP).
 
     The assignment ORDER BY wraps list_cosine_similarity in the same
@@ -322,13 +321,13 @@ def kmeans_sql(
     DESC, so the guard makes zero vectors rank identically."""
     ctes = [
         f"k0 AS (SELECT vec_id AS cid, emb AS cemb FROM v "
-        f"WHERE vec_id % {init_mod} = 0 ORDER BY vec_id LIMIT {init_cap})"
+        f"WHERE vec_id % {init_mod} = 0 ORDER BY vec_id LIMIT {_INIT_CAP})"
     ]
     for i in range(1, n_iters + 1):
         guarded_cos = (
             "CASE WHEN list_inner_product(v.emb, v.emb) = 0"
             " OR list_inner_product(c.cemb, c.cemb) = 0 THEN NULL"
-            f" ELSE ROUND(list_cosine_similarity(v.emb, c.cemb), {round_to}) END"
+            f" ELSE ROUND(list_cosine_similarity(v.emb, c.cemb), {_ROUND}) END"
         )
         ctes.append(f"""ka{i} AS (
       SELECT vec_id, cid FROM (
@@ -344,7 +343,7 @@ def kmeans_sql(
       ) GROUP BY cid, pos
     )""")
         ctes.append(
-            f"k{i} AS (SELECT cid, list(ROUND(val, {round_to}) ORDER BY pos) AS cemb "
+            f"k{i} AS (SELECT cid, list(ROUND(val, {_ROUND}) ORDER BY pos) AS cemb "
             f"FROM km{i} GROUP BY cid)"
         )
     return ",\n    ".join(ctes)
@@ -358,7 +357,6 @@ def ivf_topk(
     centroid_mod: int = 31,
     nprobe: int = 4,
     k: int = 3,
-    round_to: int = 6,
     train_iters: int = 0,
 ) -> DataFrame:
     """ANN via IVF (inverted-file index): corpus vectors are assigned to
@@ -398,7 +396,7 @@ def ivf_topk(
         # re-run every Lloyd iteration for each consumer.
         cents = kmeans_centroids(
             vecs.select(id_col, "v"), id_col, init_mod=centroid_mod,
-            n_iters=train_iters, round_to=round_to,
+            n_iters=train_iters,
         ).cache()
     else:
         cents = (
@@ -408,7 +406,7 @@ def ivf_topk(
             .limit(_INIT_CAP)
         )
     cents_n = _with_norm(cents, "cv", "__cn")
-    assign = assign_nearest(vecs.select(id_col, "v"), cents, id_col, round_to)
+    assign = assign_nearest(vecs.select(id_col, "v"), cents, id_col)
     q = vecs.filter(F.col(id_col).isin(query_ids)).select(
         F.col(id_col).alias("query_id"),
         F.col("v").alias("qv"),
@@ -421,7 +419,7 @@ def ivf_topk(
             "ccos",
             F.round(
                 _cosine_pre(F.col("qv"), F.col("cv"), F.col("qnrm"), F.col("__cn")),
-                round_to,
+                _ROUND,
             ),
         )
         .withColumn("rn", F.row_number().over(w_probe))
@@ -436,7 +434,7 @@ def ivf_topk(
         F.col(id_col).alias("neighbor_id"),
         F.round(
             _cosine_pre(F.col("qv"), F.col("v"), F.col("qnrm"), F.col("nrm")),
-            round_to,
+            _ROUND,
         ).alias("cosine"),
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
@@ -449,7 +447,6 @@ def embedding_neardup(
     vec_col: str,
     n_planes: int = 4,
     threshold: float = 0.35,
-    round_to: int = 6,
     n_dims: int | None = None,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs: vectors in the same
@@ -480,7 +477,7 @@ def embedding_neardup(
         F.col("nrm").alias("nb"), F.col("bucket").alias("bucket_b"),
     )
     cos = F.round(
-        _cosine_pre(F.col("va"), F.col("vb"), F.col("na"), F.col("nb")), round_to
+        _cosine_pre(F.col("va"), F.col("vb"), F.col("na"), F.col("nb")), _ROUND
     )
     return (
         a.join(
@@ -500,7 +497,6 @@ def lsh_cosine_topk(
     query_ids: list[int],
     n_planes: int = 4,
     k: int = 3,
-    round_to: int = 6,
     n_dims: int | None = None,
 ) -> DataFrame:
     """ANN via hyperplane-LSH: each query only scans its own bucket
@@ -527,7 +523,7 @@ def lsh_cosine_topk(
         F.col(id_col).alias("neighbor_id"),
         F.round(
             _cosine_pre(F.col("qv"), F.col("v"), F.col("qnrm"), F.col("nrm")),
-            round_to,
+            _ROUND,
         ).alias("cosine"),
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))

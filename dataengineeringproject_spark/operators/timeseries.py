@@ -43,18 +43,17 @@ def resample_daily_locf(
     key: str,
     ts_col: str,
     agg_expr: Column,
-    value_name: str = "value_raw",
 ) -> DataFrame:
     """Aggregate to the daily grain, materialize missing (key, day)
     buckets, and forward-fill each key's series (LOCF). Output columns:
-    key, day (DateType), <value_name> (null on gap days),
-    <value_name>_locf, is_gap.
+    key, day (DateType), value_raw (null on gap days), value_raw_locf,
+    is_gap.
 
     Leading gaps (before a key's first observation) stay null in the
     LOCF column — there is nothing to carry forward; downstream chooses
     a policy (drop, backfill, default)."""
     day = F.to_date(ts_col).alias("__day")
-    agg = df.groupBy(key, day).agg(agg_expr.alias(value_name))
+    agg = df.groupBy(key, day).agg(agg_expr.alias("value_raw"))
     spine = calendar_spine(agg, key, "__day")
     joined = spine.join(agg, [key, "__day"], "left")
     w = (
@@ -65,9 +64,9 @@ def resample_daily_locf(
     return joined.select(
         key,
         F.col("__day").alias("day"),
-        value_name,
-        F.last(value_name, ignorenulls=True).over(w).alias(f"{value_name}_locf"),
-        F.col(value_name).isNull().alias("is_gap"),
+        "value_raw",
+        F.last("value_raw", ignorenulls=True).over(w).alias("value_raw_locf"),
+        F.col("value_raw").isNull().alias("is_gap"),
     )
 
 
@@ -76,7 +75,6 @@ def resample_daily_interp(
     key: str,
     ts_col: str,
     agg_expr: Column,
-    value_name: str = "value_raw",
 ) -> DataFrame:
     """Aggregate to the daily grain, materialize missing (key, day)
     buckets, and LINEARLY INTERPOLATE each key's gaps between its
@@ -86,15 +84,15 @@ def resample_daily_interp(
     hypertables). Implementation: two mirror-image windows per key —
     last-known (value, day) looking back, first-known looking forward
     — then one arithmetic lerp; no self-join, no per-gap search, state
-    = one row per window side. Output: key, day, <value_name> (null on
-    gap days), <value_name>_interp, is_gap. Leading/trailing gaps have
+    = one row per window side. Output: key, day, value_raw (null on
+    gap days), value_raw_interp, is_gap. Leading/trailing gaps have
     only one bracket and stay null — downstream picks a policy, same
     contract as LOCF's leading gaps."""
     day = F.to_date(ts_col).alias("__day")
-    agg = df.groupBy(key, day).agg(agg_expr.alias(value_name))
+    agg = df.groupBy(key, day).agg(agg_expr.alias("value_raw"))
     spine = calendar_spine(agg, key, "__day")
     joined = spine.join(agg, [key, "__day"], "left")
-    v = F.col(value_name)
+    v = F.col("value_raw")
     known_day = F.when(v.isNotNull(), F.col("__day"))
     wb = (
         Window.partitionBy(key)
@@ -121,7 +119,7 @@ def resample_daily_interp(
     return joined.select(
         key,
         F.col("__day").alias("day"),
-        value_name,
-        interp.alias(f"{value_name}_interp"),
+        "value_raw",
+        interp.alias("value_raw_interp"),
         v.isNull().alias("is_gap"),
     )

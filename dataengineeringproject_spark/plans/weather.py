@@ -3,10 +3,11 @@
 
 Stage map (reference → here):
 - extract  (v5_group_project_dag.py:36-58)  → sources.ingest + a CSV/DataFrame input
-- clean    (v5:68-101)  → `clean_stage`: E1 date parse, E2 month, P5
-  clamps, P6 median fill; P4 date-dedup is OFF by default — v5's dedup
-  before aggregation destroys the daily averages (SURVEY.md §2.8.1);
-  v1 aggregates full hourly data, which matches the declared intent.
+- clean    (v5:68-101)  → `clean_stage`: E1 date parse, E2 month, P7
+  drop of unparseable dates, P5 clamps, P6 median fill; no P4
+  date-dedup — v5's dedup before aggregation destroys the daily
+  averages (SURVEY.md §2.8.1); v1 aggregates full hourly data, which
+  matches the declared intent.
 - transform (v5:158-222) → `transform_stage`: A1 daily means + E4/A3
   wind-strength day-mode; A2 monthly means + A4 precip mode-or-null.
 - validate (v5:236-278) → `validate_stage`: expect gates with the
@@ -30,7 +31,6 @@ from dataengineeringproject_spark.operators.aggregates import agg_mode, grouped_
 from dataengineeringproject_spark.operators.cleaning import (
     WEATHER_CLAMPS,
     clamp_to_null,
-    dedup_keep_first,
     drop_unparseable,
     fill_with_median,
 )
@@ -58,32 +58,17 @@ MONTHLY_MEASURES = {
 }
 
 
-def clean_stage(
-    df: DataFrame,
-    dedup_by_date: bool = False,
-    drop_unparseable_dates: bool = True,
-    order_col: str | None = None,
-) -> DataFrame:
-    """E1+E2 parse, P5 clamp, P6 median-fill (in the reference's order:
-    clamp FIRST so medians see the cleaned domain, v5:79-94).
-
-    `dedup_by_date` reproduces v5:97 (P4) for parity experiments; the
-    canonical pipeline leaves it off (SURVEY.md §2.8.1). `order_col`
-    supplies the stable order pandas' keep='first' gets from file order.
-    `drop_unparseable_dates` is the P7 intent (reference no-op bug).
-    """
+def clean_stage(df: DataFrame) -> DataFrame:
+    """E1+E2 parse, P7 drop of unparseable dates (the reference's intent;
+    its own drop is a no-op bug), P5 clamp, P6 median-fill (in the
+    reference's order: clamp FIRST so medians see the cleaned domain,
+    v5:79-94)."""
     out = df.withColumn("date", parse_formatted_date("Formatted Date")).withColumn(
         "Month", month_str(F.col("date"))
     )
-    if drop_unparseable_dates:
-        out = drop_unparseable(out, ["date"])
+    out = drop_unparseable(out, ["date"])
     out = clamp_to_null(out, WEATHER_CLAMPS)
-    out = fill_with_median(out, WEATHER_NUMERIC_COLS)
-    if dedup_by_date:
-        if order_col is None:
-            raise ValueError("dedup_by_date requires order_col (stable input order)")
-        out = dedup_keep_first(out, ["date"], order_col)
-    return out
+    return fill_with_median(out, WEATHER_NUMERIC_COLS)
 
 
 def transform_stage(cleaned: DataFrame) -> dict[str, DataFrame]:
@@ -161,14 +146,9 @@ def validate_stage(daily: DataFrame, monthly: DataFrame) -> None:
     )
 
 
-def run_pipeline(
-    raw: DataFrame, validate: bool = True, dedup_by_date: bool = False,
-    order_col: str | None = None,
-) -> dict[str, DataFrame]:
+def run_pipeline(raw: DataFrame) -> dict[str, DataFrame]:
     """extract → clean → transform → validate, returning the two
     aggregate tables; the caller picks a sink (sources/sinks.py)."""
-    cleaned = clean_stage(raw, dedup_by_date=dedup_by_date, order_col=order_col)
-    tables = transform_stage(cleaned)
-    if validate:
-        validate_stage(tables["daily"], tables["monthly"])
+    tables = transform_stage(clean_stage(raw))
+    validate_stage(tables["daily"], tables["monthly"])
     return tables

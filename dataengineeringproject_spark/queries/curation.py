@@ -128,13 +128,13 @@ _PREFIX_SQL = (
 )
 
 
-def _prefix_fp(text_col: str, n: int = _PREFIX_N) -> Column:
-    """md5 of the first n lowercased tokens — the prefix fingerprint
+def _prefix_fp(text_col: str) -> Column:
+    """md5 of the first _PREFIX_N lowercased tokens — the prefix fingerprint
     used for eval-set leak detection (whole-doc equality is too strict:
     a leaked eval item usually reappears with trailing boilerplate, so
     contamination checks key on leading-n-gram overlap)."""
     c = F.lower(F.col(text_col))
-    return F.md5(F.concat_ws(" ", F.slice(X.tokens(c), 1, n)))
+    return F.md5(F.concat_ws(" ", F.slice(X.tokens(c), 1, _PREFIX_N)))
 
 
 @register(

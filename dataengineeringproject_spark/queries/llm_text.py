@@ -106,10 +106,10 @@ def lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- fingerprints: md5 + min-shingle-hash + simhash -------------------------
 
-def _simhash_sql(bits: int = 16) -> str:
+def _simhash_sql() -> str:
     hashes = f"list_transform(list_distinct({_TOKS}), t -> {X.token_hash_sql('t')})"
     terms = []
-    for b in range(bits):
+    for b in range(16):
         ones = f"len(list_filter(h, x -> (x >> {b}) & 1 = 1))"
         terms.append(f"(CASE WHEN n > 0 AND 2 * {ones} >= n THEN {2**b} ELSE 0 END)")
     return (

@@ -16,15 +16,13 @@ from dataengineeringproject_spark.registry import register
 from dataengineeringproject_spark.schemas import TESTDATA_TABLES, load_table
 
 
-def register_testdata_views(
-    spark: SparkSession, sf_dir: str, prefix: str = "deps_"
-) -> list[str]:
-    """Register every testdata table as a temp view `{prefix}{name}`
+def register_testdata_views(spark: SparkSession, sf_dir: str) -> list[str]:
+    """Register every testdata table as a temp view `deps_{name}`
     (idempotent; replaces stale views pointing at another sf_dir)."""
     names = []
     for t in TESTDATA_TABLES:
-        load_table(spark, sf_dir, t).createOrReplaceTempView(f"{prefix}{t}")
-        names.append(f"{prefix}{t}")
+        load_table(spark, sf_dir, t).createOrReplaceTempView(f"deps_{t}")
+        names.append(f"deps_{t}")
     return names
 
 

@@ -12,8 +12,7 @@ builder is still the engine's Kafka contract, and the JSON row codec
 DataFrames, which is where the semantics live.
 
 Scale posture: one Kafka partition maps to one Spark task —
-`minPartitions` can fan out further; `maxOffsetsPerTrigger` bounds
-micro-batch size (backpressure).
+`minPartitions` can fan out further.
 """
 
 from __future__ import annotations
@@ -29,23 +28,19 @@ def read_kafka_json_stream(
     spark: SparkSession,
     bootstrap_servers: str,
     topic: str,
-    schema: T.StructType = EVENTS_STREAM_SCHEMA,
     starting_offsets: str = "latest",
-    max_offsets_per_trigger: int | None = None,
 ) -> DataFrame:
-    """readStream from a Kafka topic, decoding the JSON value into typed
-    columns. Returns a streaming DataFrame with `schema`'s columns plus
-    kafka metadata (topic, partition, offset, kafka_ts)."""
-    reader = (
+    """readStream from a Kafka topic, decoding the JSON value into the
+    events columns (EVENTS_STREAM_SCHEMA) plus kafka metadata (topic,
+    partition, offset, kafka_ts)."""
+    raw = (
         spark.readStream.format("kafka")
         .option("kafka.bootstrap.servers", bootstrap_servers)
         .option("subscribe", topic)
         .option("startingOffsets", starting_offsets)
+        .load()
     )
-    if max_offsets_per_trigger is not None:
-        reader = reader.option("maxOffsetsPerTrigger", max_offsets_per_trigger)
-    raw = reader.load()
-    return decode_json_rows(raw, schema)
+    return decode_json_rows(raw, EVENTS_STREAM_SCHEMA)
 
 
 def decode_json_rows(raw: DataFrame, schema: T.StructType) -> DataFrame:

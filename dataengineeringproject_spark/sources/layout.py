@@ -34,12 +34,10 @@ def write_bucketed(
     bucket_cols: list[str],
     n_buckets: int,
     path: str | None = None,
-    sort: bool = True,
 ) -> None:
-    """Persist `df` as a bucketed (and bucket-sorted) parquet table.
+    """Persist `df` as a bucketed and bucket-sorted parquet table.
 
-    `sort=True` additionally sorts within each bucket file on the
-    bucket columns, letting a downstream sort-merge join skip its sort
+    Sorting within each bucket file on the bucket columns lets a downstream sort-merge join skip its sort
     as well as its shuffle — but Spark only trusts bucket-sortedness
     when each bucket holds exactly ONE file, so the frame is
     pre-repartitioned on the bucket columns (same murmur3 hash family
@@ -48,37 +46,34 @@ def write_bucketed(
     files-per-bucket = write-tasks × buckets small-files explosion.
     `path` makes it an external table (data at `path`, metadata in the
     session catalog)."""
-    if sort:
-        df = df.repartition(n_buckets, *[df[c] for c in bucket_cols])
-    w = df.write.format("parquet").mode("overwrite").bucketBy(
-        n_buckets, *bucket_cols
+    df = df.repartition(n_buckets, *[df[c] for c in bucket_cols])
+    w = (
+        df.write.format("parquet")
+        .mode("overwrite")
+        .bucketBy(n_buckets, *bucket_cols)
+        .sortBy(*bucket_cols)
     )
-    if sort:
-        w = w.sortBy(*bucket_cols)
     if path is not None:
         w = w.option("path", path)
     w.saveAsTable(table)
 
 
-def write_partitioned(
-    df: DataFrame, path: str, partition_cols: list[str], mode: str = "overwrite"
-) -> str:
-    """Directory-partitioned parquet layout: one subdirectory per
-    distinct partition-column tuple. Keep partition columns
-    low-cardinality (day, category, region) — each tuple is a
-    directory, and millions of tiny directories are their own
-    scale problem."""
-    df.write.mode(mode).partitionBy(*partition_cols).parquet(path)
+def write_partitioned(df: DataFrame, path: str, partition_cols: list[str]) -> str:
+    """Directory-partitioned parquet layout (overwrites `path`): one
+    subdirectory per distinct partition-column tuple. Keep partition
+    columns low-cardinality (day, category, region) — each tuple is a
+    directory, and millions of tiny directories are their own scale
+    problem."""
+    df.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
     return path
 
 
-def write_clustered(
-    df: DataFrame, path: str, cluster_cols: list[str], mode: str = "overwrite"
-) -> str:
-    """Sort within partitions by `cluster_cols` before writing, so each
-    parquet file's row groups carry tight min/max statistics on those
-    columns and range predicates skip whole row groups at scan time."""
-    df.sortWithinPartitions(*cluster_cols).write.mode(mode).parquet(path)
+def write_clustered(df: DataFrame, path: str, cluster_cols: list[str]) -> str:
+    """Sort within partitions by `cluster_cols` before overwriting
+    `path`, so each parquet file's row groups carry tight min/max
+    statistics on those columns and range predicates skip whole row
+    groups at scan time."""
+    df.sortWithinPartitions(*cluster_cols).write.mode("overwrite").parquet(path)
     return path
 
 
@@ -117,15 +112,14 @@ def write_zordered(
     col_a: str,
     col_b: str,
     bits: int = 16,
-    mode: str = "overwrite",
 ) -> str:
     """Cluster files by the 2-D Morton key of (col_a, col_b) before
-    writing — multi-dimensional row-group skipping for workloads that
+    overwriting `path` — multi-dimensional row-group skipping for workloads that
     range-filter on either (or both) of two columns. Columns must be
     non-negative ints fitting in `bits` bits (pre-bucket them with
     `width_bucket`/`%` otherwise)."""
     z = morton2(col_a, col_b, bits)
-    df.sortWithinPartitions(z).write.mode(mode).parquet(path)
+    df.sortWithinPartitions(z).write.mode("overwrite").parquet(path)
     return path
 
 

@@ -9,14 +9,12 @@ from pyspark.sql import types as T
 
 
 def read_csv(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType | None = None,
-    header: bool = True,
+    spark: SparkSession, path: str, schema: T.StructType | None = None
 ) -> DataFrame:
-    """CSV scan (group_project_dag.py:119). With an explicit schema the
-    scan skips the inference pass (one read instead of two)."""
-    reader = spark.read.option("header", header)
+    """CSV scan with a header row (group_project_dag.py:119). With an
+    explicit schema the scan skips the inference pass (one read instead
+    of two)."""
+    reader = spark.read.option("header", True)
     if schema is not None:
         reader = reader.schema(schema)
     else:

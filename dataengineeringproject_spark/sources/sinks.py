@@ -24,25 +24,26 @@ SMALL_SINK_MAX_ROWS = 5_000_000
 
 
 def write_parquet(
-    df: DataFrame, path: str, mode: str = "overwrite", partition_by: list[str] | None = None
+    df: DataFrame, path: str, partition_by: list[str] | None = None
 ) -> None:
-    """Primary sink. `partition_by` on the natural query key (e.g. a
-    date column) buys partition pruning for downstream readers."""
-    writer = df.write.mode(mode)
+    """Primary sink; overwrites `path`. `partition_by` on the natural
+    query key (e.g. a date column) buys partition pruning for
+    downstream readers."""
+    writer = df.write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)
 
 
-def write_single_csv(df: DataFrame, path: str, header: bool = True) -> str:
-    """S3: the reference's single-file CSV contract
+def write_single_csv(df: DataFrame, path: str) -> str:
+    """S3: the reference's single-file CSV contract with a header row
     (group_project_dag.py:180,186 `to_csv(index=False)`). Spark writes a
     directory of parts; we coalesce(1) and rename the single part to
     `path`. Only valid for small outputs — guarded."""
     _guard_small(df, "write_single_csv")
     tmp = tempfile.mkdtemp(prefix="csv_sink_")
     try:
-        df.coalesce(1).write.mode("overwrite").option("header", header).csv(tmp)
+        df.coalesce(1).write.mode("overwrite").option("header", True).csv(tmp)
         part = glob.glob(os.path.join(tmp, "part-*.csv"))[0]
         os.makedirs(os.path.dirname(os.path.abspath(path)), exist_ok=True)
         shutil.move(part, path)
@@ -56,7 +57,6 @@ def write_sqlite(
     db_path: str,
     table: str,
     mode: str = "append",
-    with_id_pk: bool = True,
 ) -> int:
     """S4+S5: SQLite load with auto-DDL and autoincrement surrogate PK,
     the reference's load task (v5_group_project_dag.py:303-361: CREATE
@@ -73,7 +73,7 @@ def write_sqlite(
     con = sqlite3.connect(db_path)
     try:
         cols = ", ".join(f'"{c}" {_sqlite_type(t)}' for c, t in df.dtypes)
-        pk = '"id" INTEGER PRIMARY KEY AUTOINCREMENT, ' if with_id_pk else ""
+        pk = '"id" INTEGER PRIMARY KEY AUTOINCREMENT, '
         if mode == "overwrite":
             con.execute(f'DROP TABLE IF EXISTS "{table}"')
         con.execute(f'CREATE TABLE IF NOT EXISTS "{table}" ({pk}{cols})')
@@ -130,9 +130,10 @@ def _guard_small(df: DataFrame, sink: str) -> None:
         )
 
 
-def write_orc(df: DataFrame, path: str, mode: str = "overwrite") -> str:
-    """ORC sink — the parquet twin for ORC-standardized lakes."""
-    df.write.mode(mode).orc(path)
+def write_orc(df: DataFrame, path: str) -> str:
+    """ORC sink (overwrites `path`) — the parquet twin for
+    ORC-standardized lakes."""
+    df.write.mode("overwrite").orc(path)
     return path
 
 

@@ -2,9 +2,9 @@
 query (SURVEY.md §2.7, §7.2.9).
 
 Batch `groupBy(to_date(ts))` becomes `groupBy(window(ts, "1 day"))`
-with a watermark bounding state. Two operators:
+with a watermark bounding state. Four operators:
 
-- `daily_means_stream`: A1 as pure built-ins (watermark + tumbling
+- `daily_means_stream`: A1 as pure built-ins (1-day watermark + tumbling
   window + avg) — incrementally computable, append output after the
   watermark passes, state size = open windows × groups.
 
@@ -15,6 +15,11 @@ with a watermark bounding state. Two operators:
   each micro-batch folds its rows in and emits the current argmax.
   This is the custom-stateful-operator pattern the engine uses for any
   two-level streaming aggregate.
+
+- `dedup_daily_counts_stream`: `dropDuplicatesWithinWatermark` on the
+  event key (40-day horizon) before a daily sum + count.
+
+- `sliding_means_stream`: 2-day windows sliding by 1 day.
 
 Source: any file-drop directory or Kafka topic; tests drive a parquet
 directory with availableNow + a memory sink.
@@ -28,14 +33,12 @@ upstream of the same transformations.
 from __future__ import annotations
 
 from collections.abc import Iterator
-from typing import Any
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.streaming.stateful_processor import StatefulProcessor
 
 EVENTS_STREAM_SCHEMA = T.StructType(
     [
@@ -50,27 +53,22 @@ EVENTS_STREAM_SCHEMA = T.StructType(
 
 
 def read_events_stream(
-    spark: SparkSession,
-    source_dir: str,
-    schema: T.StructType = EVENTS_STREAM_SCHEMA,
-    max_files_per_trigger: int | None = None,
+    spark: SparkSession, source_dir: str, max_files_per_trigger: int | None = None
 ) -> DataFrame:
     """File-drop source (the streaming analog of S1's landing zone).
     Swap for `format("kafka")` + from_json(value) in production.
     max_files_per_trigger bounds micro-batch size (and, with
     availableNow, forces multi-batch runs so watermarks advance)."""
-    reader = spark.readStream.schema(schema)
+    reader = spark.readStream.schema(EVENTS_STREAM_SCHEMA)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     return reader.parquet(source_dir)
 
 
-def daily_means_stream(
-    events: DataFrame, watermark: str = "1 day"
-) -> DataFrame:
+def daily_means_stream(events: DataFrame) -> DataFrame:
     """A1 as a watermarked tumbling-window aggregate (append-capable)."""
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", "1 day")
         .groupBy(F.window("ts", "1 day").alias("win"))
         .agg(F.avg("value").alias("avg_value"), F.count(F.lit(1)).alias("n_events"))
         .select(
@@ -127,82 +125,18 @@ def daily_mode_stream(events: DataFrame) -> DataFrame:
     )
 
 
-class _ModeProcessor(StatefulProcessor):
-    """StatefulProcessor for the A3 deterministic mode (SURVEY.md §2.4):
-    per-day MapState of event_type → count; each batch folds its rows in
-    and emits the current argmax (max count, tie → lexicographically
-    smallest — pandas mode()[0] semantics).
-
-    transformWithState is the newer per-key-state API (typed state
-    handles + timers) replacing applyInPandasWithState's single blob;
-    MapState gives point updates per category instead of rewriting the
-    whole dict, which matters when |categories| is large."""
-
-    def init(self, handle) -> None:
-        self._counts = handle.getMapState(
-            "counts", "event_type string", "cnt long"
-        )
-
-    def handleInputRows(
-        self, key: tuple[str], rows: Iterator[pd.DataFrame], timerValues: Any
-    ) -> Iterator[pd.DataFrame]:
-        for pdf in rows:
-            for v, n in pdf["event_type"].dropna().value_counts().items():
-                prior = (
-                    self._counts.getValue((v,))[0]
-                    if self._counts.containsKey((v,))
-                    else 0
-                )
-                self._counts.updateValue((v,), (prior + int(n),))
-        acc = {k[0]: v[0] for k, v in self._counts.iterator()}
-        if acc:
-            best = sorted(acc.items(), key=lambda kv: (-kv[1], kv[0]))[0][0]
-            total = sum(acc.values())
-        else:
-            best, total = None, 0
-        yield pd.DataFrame(
-            {"day": [key[0]], "mode_event_type": [best], "n_seen": [total]}
-        )
-
-    def handleInitialState(self, key, initialState, timerValues) -> None:
-        pass
-
-    def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-        return iter([])
-
-    def close(self) -> None:
-        pass
-
-
-def daily_mode_stream_tws(events: DataFrame) -> DataFrame:
-    """A3 as a transformWithState operator — same semantics as
-    `daily_mode_stream`, newer engine (RocksDB-backed typed state,
-    per-key timers available for TTL/eviction at scale)."""
-    keyed = events.select(
-        F.date_format(F.to_date("ts"), "yyyy-MM-dd").alias("day"), "event_type"
-    ).groupBy("day")
-    return keyed.transformWithStateInPandas(
-        statefulProcessor=_ModeProcessor(),
-        outputStructType=_MODE_OUT_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
-def dedup_daily_counts_stream(
-    events: DataFrame, watermark: str = "40 days"
-) -> DataFrame:
+def dedup_daily_counts_stream(events: DataFrame) -> DataFrame:
     """Exactly-once-per-event daily rollup over an at-least-once source:
     `dropDuplicatesWithinWatermark` on the event key absorbs redelivered
     records (Kafka at-least-once, file-source replays) before the
     windowed aggregate. State = one entry per event_id inside the
     watermark horizon — the watermark is the retention contract: a
-    duplicate arriving later than `watermark` after the original is NOT
+    duplicate arriving more than 40 days after the original is NOT
     absorbed (its state was evicted), which is exactly the at-least-once
     → effectively-once guarantee Kafka consumers document. The test
     harness uses a horizon longer than the dataset span so replays are
     always absorbed and the result is deterministic."""
-    deduped = events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
+    deduped = events.withWatermark("ts", "40 days").dropDuplicatesWithinWatermark(
         ["event_id"]
     )
     # sum+count, not avg: the consumer derives avg as round(sum,2)/n —
@@ -236,19 +170,14 @@ def run_to_memory(
     )
 
 
-def sliding_means_stream(
-    events: DataFrame,
-    duration: str = "2 days",
-    slide: str = "1 day",
-    watermark: str = "2 days",
-) -> DataFrame:
-    """Sliding-window streaming aggregate: each event feeds
-    duration/slide overlapping windows (map-side expansion before the
-    keyed state update). Watermark ≥ duration so a window's state lives
-    until its last contributing slide has passed."""
+def sliding_means_stream(events: DataFrame) -> DataFrame:
+    """Sliding-window streaming aggregate: 2-day windows every 1 day, so
+    each event feeds two overlapping windows (map-side expansion before
+    the keyed state update). Watermark ≥ duration so a window's state
+    lives until its last contributing slide has passed."""
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", duration, slide).alias("win"))
+        events.withWatermark("ts", "2 days")
+        .groupBy(F.window("ts", "2 days", "1 day").alias("win"))
         .agg(F.avg("value").alias("avg_value"), F.count(F.lit(1)).alias("n_events"))
         .select(
             F.date_format(F.col("win.start"), "yyyy-MM-dd HH:mm:ss").alias("win_start"),

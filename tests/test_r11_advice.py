@@ -155,10 +155,10 @@ def test_ensure_min_parallelism_semantics(spark):
 def test_bench_json_carries_action_tag():
     """The emitted bench record must say which timing action produced
     it (collect vs count are not comparable: count() prunes projected
-    expressions — r10 SimHash lesson)."""
+    expressions — r10 SimHash lesson). bench.py always collects."""
     import bench
 
-    assert bench.BENCH_ACTION in ("collect", "count")
+    assert bench.BENCH_ACTION == "collect"
     import json
     from pathlib import Path
 
@@ -166,7 +166,7 @@ def test_bench_json_carries_action_tag():
     if out.exists():
         rec = json.loads(out.read_text())
         if rec.get("metric") == "all_queries_total":
-            assert rec.get("action") in ("collect", "count")
+            assert rec.get("action") == "collect"
 
 
 def _plan(df) -> str:

@@ -147,8 +147,7 @@ def test_global_row_number_duplicate_keys_with_tiebreak(spark):
 
 
 def test_global_row_number_guards(spark):
-    """Internal-name collisions and the durable knob's checkpoint-dir
-    requirement fail fast with a clear message."""
+    """Internal-name collisions fail fast with a clear message."""
     import pytest
 
     from dataengineeringproject_spark.operators.relational import (
@@ -158,11 +157,6 @@ def test_global_row_number_guards(spark):
     bad = spark.range(3).select(F.col("id"), F.lit(0).alias("__pid"))
     with pytest.raises(ValueError, match="__pid"):
         global_row_number(bad, [F.asc("id")])
-
-    ok = spark.range(3)
-    if spark.sparkContext.getCheckpointDir() is None:
-        with pytest.raises(ValueError, match="setCheckpointDir"):
-            global_row_number(ok, [F.asc("id")], durable=True)
 
 
 def test_knn_scale_classes_and_twin_registered():

@@ -328,7 +328,7 @@ def test_resample_locf_properties(spark, rows):
         }
     )
     df = spark.createDataFrame(pdf)
-    out = resample_daily_locf(df, "k", "ts", F.avg("v"), "value_raw").toPandas()
+    out = resample_daily_locf(df, "k", "ts", F.avg("v")).toPandas()
     n_keys = pdf["k"].nunique()
     days = (pdf["ts"].dt.normalize().max() - pdf["ts"].dt.normalize().min()).days + 1
     assert len(out) == n_keys * days  # rectangular spine

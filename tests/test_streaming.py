@@ -83,66 +83,6 @@ def test_streaming_daily_mode_matches_batch(spark, events_dir):
     assert got == want
 
 
-def test_streaming_daily_mode_tws_matches_batch(spark, events_dir, tmp_path):
-    """transformWithState port of the stateful mode operator: same
-    batch-equivalence contract as the applyInPandasWithState variant.
-    transformWithState requires the RocksDB state store provider, and
-    its Python runner speaks protobuf to the JVM — gate on the import
-    (not installable in this container; the operator itself is real)."""
-    pytest.importorskip(
-        "google.protobuf", reason="transformWithState runner needs protobuf"
-    )
-    from dataengineeringproject_spark.operators.aggregates import agg_mode
-    from dataengineeringproject_spark.streaming.daily import (
-        daily_mode_stream_tws,
-        read_events_stream,
-    )
-
-    provider_conf = "spark.sql.streaming.stateStore.providerClass"
-    prior = spark.conf.get(provider_conf, None)
-    spark.conf.set(
-        provider_conf,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        stream = daily_mode_stream_tws(read_events_stream(spark, events_dir))
-        q = (
-            stream.writeStream.outputMode("update")
-            .format("memory")
-            .queryName("daily_mode_tws_out")
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        if prior is not None:
-            spark.conf.set(provider_conf, prior)
-        else:
-            spark.conf.unset(provider_conf)
-    got = {
-        r["day"]: r["mode_event_type"]
-        for r in spark.sql(
-            """
-            SELECT day, mode_event_type FROM (
-              SELECT *, row_number() OVER (PARTITION BY day ORDER BY n_seen DESC) rn
-              FROM daily_mode_tws_out
-            ) WHERE rn = 1
-            """
-        ).collect()
-    }
-    ev = spark.read.parquet(events_dir).select(
-        F.date_format(F.to_date("ts"), "yyyy-MM-dd").alias("day"), "event_type"
-    )
-    want = {
-        r["day"]: r["mode_event_type"]
-        for r in agg_mode(
-            ev, ["day"], "event_type", on_tie="min", alias="mode_event_type"
-        ).collect()
-    }
-    assert got == want
-
-
 def test_streaming_checkpoint_recovery_exactly_once(spark, tmp_path):
     """Restart-from-checkpoint: run 1 processes file A into a parquet
     sink; file B lands; run 2 with the SAME checkpoint processes ONLY

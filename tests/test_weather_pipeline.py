@@ -24,7 +24,7 @@ def results(spark, fixture_df):
     from dataengineeringproject_spark.schemas import WEATHER_HISTORY
 
     raw = spark.createDataFrame(fixture_df, schema=WEATHER_HISTORY)
-    tables = run_pipeline(raw, validate=False)
+    tables = run_pipeline(raw)
     golden = pandas_golden(fixture_df)
     return tables, golden
 
@@ -64,31 +64,79 @@ def test_daily_row_count_is_distinct_dates(results, fixture_df):
     assert n_days == fixture_df.loc[valid, "Formatted Date"].str[:10].nunique()
 
 
-def test_validation_gates_raise_reference_messages(spark, fixture_df):
+_MISSING = "Validation failed: Missing critical data"
+_RANGE = "Validation failed: {} value outside of expected range"
+
+# One breaking edit per gate of validate_stage, in the reference's gate
+# order (v5:243-267): (table, column, value that fails the gate).
+_GATE_BREAKS = {
+    "daily_null": ("daily", "daily_avg_pressure", None),
+    "monthly_null": ("monthly", "mode_precipitation_type", None),
+    "daily_temperature": ("daily", "daily_avg_temperature", 99.0),
+    "daily_humidity": ("daily", "daily_avg_humidity", 2.0),
+    "daily_wind": ("daily", "daily_avg_wind_speed", 500.0),
+    "monthly_temperature": ("monthly", "monthly_avg_temperature", -99.0),
+    "monthly_humidity": ("monthly", "monthly_avg_humidity", -0.5),
+}
+_GATE_MESSAGES = {
+    "daily_null": _MISSING,
+    "monthly_null": _MISSING,
+    "daily_temperature": _RANGE.format("Daily temperature"),
+    "daily_humidity": _RANGE.format("Daily humidity"),
+    "daily_wind": _RANGE.format("Daily wind speed"),
+    "monthly_temperature": _RANGE.format("Monthly temperature"),
+    "monthly_humidity": _RANGE.format("Monthly humidity"),
+}
+
+
+@pytest.fixture(scope="module")
+def valid_tables(results):
+    """The pipeline's two tables (run_pipeline has validated them),
+    materialized so each gate case re-reads them cheaply."""
+    tables, _ = results
+    return {name: df.localCheckpoint() for name, df in tables.items()}
+
+
+def _validation_message(valid_tables, *gates: str) -> str:
+    """Break `gates` at once and return the message validate_stage raises."""
     from dataengineeringproject_spark.operators.validation import ValidationError
-    from dataengineeringproject_spark.plans.weather import run_pipeline, validate_stage
-    from dataengineeringproject_spark.schemas import WEATHER_HISTORY
+    from dataengineeringproject_spark.plans.weather import validate_stage
     from pyspark.sql import functions as F
 
-    raw = spark.createDataFrame(fixture_df, schema=WEATHER_HISTORY)
-    tables = run_pipeline(raw, validate=False)
+    tables = dict(valid_tables)
+    for gate in gates:
+        table, col, value = _GATE_BREAKS[gate]
+        dtype = dict(tables[table].dtypes)[col]
+        tables[table] = tables[table].withColumn(col, F.lit(value).cast(dtype))
+    with pytest.raises(ValidationError) as err:
+        validate_stage(tables["daily"], tables["monthly"])
+    return str(err.value)
 
-    # inject a violation: temperature far out of range
-    bad_daily = tables["daily"].withColumn(
-        "daily_avg_temperature", F.lit(99.0)
-    )
-    with pytest.raises(ValidationError, match="Daily temperature value outside"):
-        validate_stage(bad_daily, tables["monthly"])
 
-    bad_monthly = tables["monthly"].withColumn("monthly_avg_humidity", F.lit(2.0))
-    with pytest.raises(ValidationError, match="Monthly humidity value outside"):
-        validate_stage(tables["daily"], bad_monthly)
+def test_validation_gates_raise_reference_messages(valid_tables):
+    """Each of the seven gates, broken alone, raises the reference's
+    exact message."""
+    for gate, msg in _GATE_MESSAGES.items():
+        assert _validation_message(valid_tables, gate) == msg, gate
 
-    null_daily = tables["daily"].withColumn(
-        "daily_avg_pressure", F.lit(None).cast("double")
-    )
-    with pytest.raises(ValidationError, match="Missing critical data"):
-        validate_stage(null_daily, tables["monthly"])
+
+@pytest.mark.parametrize(
+    "gates, msg",
+    [
+        (("monthly_temperature", "daily_wind"), _RANGE.format("Daily wind speed")),
+        (("monthly_humidity", "daily_humidity"), _RANGE.format("Daily humidity")),
+        (("daily_humidity", "daily_temperature"), _RANGE.format("Daily temperature")),
+        (("daily_temperature", "monthly_null"), _MISSING),
+        (("monthly_humidity", "daily_null"), _MISSING),
+    ],
+    ids=["two_range_gates", "daily_before_monthly", "daily_range_order",
+         "null_before_range", "daily_null_before_monthly_range"],
+)
+def test_validation_gates_fire_in_reference_order(valid_tables, gates, msg):
+    """With two gates broken, the earlier gate in the reference's order
+    (nulls, then daily temperature/humidity/wind, then monthly
+    temperature/humidity) decides the message."""
+    assert _validation_message(valid_tables, *gates) == msg
 
 
 def test_wind_boundaries_land_in_lower_bucket(spark):
