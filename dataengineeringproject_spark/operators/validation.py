@@ -12,10 +12,10 @@ from __future__ import annotations
 
 import re
 from collections.abc import Sequence
-from pathlib import Path
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from dataengineeringproject_spark.streaming.commit import append_batch
 
 
 class ValidationError(ValueError):
@@ -63,20 +63,6 @@ def _column_label(condition: Column) -> str:
     return m.group(1) if m else s
 
 
-def _write_batch_once(df: DataFrame, base_path: str, batch_id: int) -> None:
-    """Idempotent per-batch file write: each micro-batch lands in its
-    own hive-style `batch_id=<id>` directory (the id surfaces as a
-    partition column on read — useful lineage). A directory whose
-    `_SUCCESS` marker exists was fully committed by a previous attempt
-    and is skipped; a partial directory from a crash is overwritten.
-    This upgrades foreachBatch's at-least-once replay to
-    effectively-once per sink."""
-    out = Path(base_path) / f"batch_id={batch_id}"
-    if (out / "_SUCCESS").exists():
-        return
-    df.write.mode("overwrite").parquet(str(out))
-
-
 def validate_stream_dead_letter(
     stream: DataFrame,
     condition: Column,
@@ -88,17 +74,19 @@ def validate_stream_dead_letter(
     can't fail-stop per bad record, so violations are ROUTED to a
     dead-letter sink (with the violated condition attached) while valid
     rows continue to the main sink. foreachBatch replays are
-    at-least-once, so each sink writes through `_write_batch_once`
-    (batch-id-named directories, skip-if-committed) — a failure between
-    the valid write and the dead-letter write replays the batch, skips
-    the already-committed valid dir, and completes only the missing
-    dead-letter dir. Net effect: effectively-once on both sinks."""
+    at-least-once, so both sinks are log-form sinks of
+    `streaming.commit`: each batch lands in `batch_id=<id>` under each
+    path, a committed dir is skipped, and readers (`read_log`) see only
+    committed dirs — a failure between the valid write and the
+    dead-letter write replays the batch, skips the already-committed
+    valid dir, and completes only the missing dead-letter dir. Net
+    effect: effectively-once on both sinks."""
     cond_str = _column_label(condition)
 
     def route(batch_df: DataFrame, batch_id: int) -> None:
         ok = F.coalesce(condition, F.lit(False))
-        _write_batch_once(batch_df.filter(ok), valid_path, batch_id)
-        _write_batch_once(
+        append_batch(batch_df.filter(ok), valid_path, batch_id)
+        append_batch(
             batch_df.filter(~ok).withColumn("__violated", F.lit(cond_str)),
             dead_letter_path,
             batch_id,

@@ -22,6 +22,12 @@ from dataengineeringproject_spark.registry import (
     staged,
 )
 from dataengineeringproject_spark.schemas import load_table, local_df
+from dataengineeringproject_spark.streaming.commit import (
+    commit_version,
+    drive_landing,
+    latest_version,
+    pinned_shuffle_partitions,
+)
 
 _EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
 
@@ -2577,53 +2583,29 @@ def cdc_merge_frames(state: DataFrame | None, batch_ev: DataFrame) -> DataFrame:
 def _run_cdc_stream(spark: SparkSession, sf_dir: str) -> str:
     """Drive the MERGE-loop stream (streaming_cdc_scd1_upsert) over the
     staged landing zone once per events generation; returns the last
-    committed state version's dir."""
+    committed state version's dir. The state table is a snapshot-form
+    sink of `streaming.commit`: one `v=<batch_id>` version per trigger,
+    merged from the newest committed one."""
     from dataengineeringproject_spark.queries.streaming_q import _staged_events
 
     land = _staged_events(spark, sf_dir)
     ev = load_table(spark, sf_dir, "events")
     state_root = scratch_dir("deps_cdc_stream_state_")
     ckpt = scratch_dir("deps_cdc_stream_ckpt_")
-    state: dict[str, str | None] = {"path": None}
 
     def _merge(batch_ev: DataFrame, batch_id: int) -> None:
-        prev = (
-            None
-            if state["path"] is None
-            else spark.read.schema(_cdc_state_schema(batch_ev)).parquet(
-                state["path"]
+        def write(prev: str | None, new: str) -> None:
+            state = (
+                None
+                if prev is None
+                else spark.read.schema(_cdc_state_schema(batch_ev)).parquet(prev)
             )
-        )
-        merged = cdc_merge_frames(prev, batch_ev)
-        new_path = f"{state_root}/v{batch_id}"
-        merged.write.mode("overwrite").parquet(new_path)
-        state["path"] = new_path
-        # retention runs as part of the commit loop: storage stays
-        # bounded at 2 snapshots (current + one grace copy for
-        # in-flight readers) instead of growing by one per trigger
-        from dataengineeringproject_spark.sources.layout import (
-            vacuum_versions,
-        )
+            cdc_merge_frames(state, batch_ev).write.mode("overwrite").parquet(new)
 
-        vacuum_versions(state_root, keep=2, current=new_path)
+        commit_version(state_root, batch_id, write)
 
-    from dataengineeringproject_spark.queries.streaming_q import (
-        _pinned_shuffle_partitions,
-    )
-
-    with _pinned_shuffle_partitions(spark, 8):
-        q = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(land)
-            .writeStream.foreachBatch(_merge)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    assert state["path"] is not None
-    return state["path"]
+    drive_landing(spark, land, ev.schema, _merge, ckpt)
+    return latest_version(state_root)
 
 
 @register(
@@ -2670,8 +2652,11 @@ def streaming_cdc_scd1_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     At 100 TB: state is partitioned by key range (each MERGE shuffles
     only the micro-batch + touched state partitions under AQE), the
-    per-trigger cost is O(micro-batch + state), and restart replays
-    from the checkpoint against the last committed state version."""
+    per-trigger cost is O(micro-batch + state). A restart re-runs the
+    last uncommitted trigger from the checkpoint: its merge reads the
+    newest committed state version (found on disk, not held in driver
+    memory), and a trigger whose version already committed is
+    skipped."""
     return spark.read.parquet(_run_cdc_stream(spark, sf_dir)).filter(
         F.col("last_op") != "error"
     ).drop("ts", "event_id", "value")
@@ -2812,7 +2797,6 @@ def streaming_value_quantiles_binned(
     max are order-insensitive), so this carries the batch twin's full
     value-hash oracle."""
     from dataengineeringproject_spark.queries.streaming_q import (
-        _pinned_shuffle_partitions,
         _RUN_ID,
         _staged_events,
     )
@@ -2826,7 +2810,7 @@ def streaming_value_quantiles_binned(
         .withColumn("__one", F.lit(1))
     )
     name = f"vqb_stream_q_{next(_RUN_ID)}"
-    with _pinned_shuffle_partitions(spark, 8):
+    with pinned_shuffle_partitions(spark, 8):
         src = (
             spark.readStream.schema(ev.schema)
             .option("maxFilesPerTrigger", 1)
@@ -9098,88 +9082,80 @@ def effective_source_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _run_etr_stream(spark: SparkSession, sf_dir: str) -> str:
     """Drive the transition-counting stream (streaming_event_transitions)
     over the staged landing zone once per events generation; returns
-    the last committed counts version's dir."""
-    from pyspark.sql import Window
-
-    from dataengineeringproject_spark.queries.streaming_q import (
-        _pinned_shuffle_partitions,
-        _staged_events,
-    )
-    from dataengineeringproject_spark.sources.layout import (
-        vacuum_versions,
-    )
+    the last committed counts dir. Both state tables live in one
+    snapshot-form version of `streaming.commit` per trigger
+    (`v=<batch_id>/last`, `v=<batch_id>/cnt`), so they commit
+    together."""
+    from dataengineeringproject_spark.queries.streaming_q import _staged_events
 
     land = _staged_events(spark, sf_dir)
     ev = load_table(spark, sf_dir, "events")
-    roots = {k: scratch_dir(f"deps_etr_{k}_") for k in ("last", "cnt", "ckpt")}
-    st: dict[str, str | None] = {"last": None, "cnt": None}
+    root = scratch_dir("deps_etr_state_")
+    ckpt = scratch_dir("deps_etr_ckpt_")
 
     def _step(batch_ev: DataFrame, batch_id: int) -> None:
-        w = Window.partitionBy("user_id").orderBy(
-            F.asc("ts"), F.asc("event_id")
+        commit_version(
+            root, batch_id, lambda prev, new: _etr_fold(spark, batch_ev, prev, new)
         )
-        b = batch_ev.select(
-            "user_id", "event_type", "ts", "event_id",
-            F.lead("event_type").over(w).alias("nxt"),
-            F.row_number().over(w).alias("rn"),
-            F.count(F.lit(1))
-            .over(Window.partitionBy("user_id"))
-            .alias("cnt_u"),
+
+    drive_landing(spark, land, ev.schema, _step, ckpt)
+    return f"{latest_version(root)}/cnt"
+
+
+def _etr_fold(
+    spark: SparkSession, batch_ev: DataFrame, prev: str | None, new: str
+) -> None:
+    """One transition-counting step: fold `batch_ev` into the state
+    version `prev` (None before the first batch) and write both state
+    tables, `last` and `cnt`, under the version dir `new`."""
+    from pyspark.sql import Window
+
+    w = Window.partitionBy("user_id").orderBy(F.asc("ts"), F.asc("event_id"))
+    b = batch_ev.select(
+        "user_id", "event_type", "ts", "event_id",
+        F.lead("event_type").over(w).alias("nxt"),
+        F.row_number().over(w).alias("rn"),
+        F.count(F.lit(1))
+        .over(Window.partitionBy("user_id"))
+        .alias("cnt_u"),
+    )
+    inb = (
+        b.filter(F.col("nxt").isNotNull())
+        .groupBy(
+            F.col("event_type").alias("cur_type"),
+            F.col("nxt").alias("next_type"),
         )
-        inb = (
-            b.filter(F.col("nxt").isNotNull())
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
+    first = b.filter(F.col("rn") == 1).select(
+        "user_id", F.col("event_type").alias("first_type")
+    )
+    last = b.filter(F.col("rn") == F.col("cnt_u")).select(
+        "user_id",
+        F.col("event_type").alias("last_type"),
+        "ts",
+        "event_id",
+    )
+    if prev is not None:
+        prev_last = spark.read.parquet(f"{prev}/last")
+        boundary = (
+            prev_last.join(first, "user_id")
             .groupBy(
-                F.col("event_type").alias("cur_type"),
-                F.col("nxt").alias("next_type"),
+                F.col("last_type").alias("cur_type"),
+                F.col("first_type").alias("next_type"),
             )
             .agg(F.count(F.lit(1)).alias("n"))
         )
-        first = b.filter(F.col("rn") == 1).select(
-            "user_id", F.col("event_type").alias("first_type")
-        )
-        last = b.filter(F.col("rn") == F.col("cnt_u")).select(
-            "user_id",
-            F.col("event_type").alias("last_type"),
-            "ts",
-            "event_id",
-        )
-        if st["last"] is not None:
-            prev_last = spark.read.parquet(st["last"])
-            boundary = (
-                prev_last.join(first, "user_id")
-                .groupBy(
-                    F.col("last_type").alias("cur_type"),
-                    F.col("first_type").alias("next_type"),
-                )
-                .agg(F.count(F.lit(1)).alias("n"))
-            )
-            inb = inb.unionByName(boundary)
-            # users silent this batch keep their dangling end
-            carry = prev_last.join(last, "user_id", "left_anti")
-            last = last.unionByName(carry)
-        if st["cnt"] is not None:
-            inb = inb.unionByName(spark.read.parquet(st["cnt"]))
-        cnt_new = inb.groupBy("cur_type", "next_type").agg(
-            F.sum("n").alias("n")
-        )
-        for key, df in (("last", last), ("cnt", cnt_new)):
-            path = f"{roots[key]}/v{batch_id}"
-            df.write.mode("overwrite").parquet(path)
-            st[key] = path
-            vacuum_versions(roots[key], keep=2, current=path)
-
-    with _pinned_shuffle_partitions(spark, 8):
-        q = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(land)
-            .writeStream.foreachBatch(_step)
-            .option("checkpointLocation", roots["ckpt"])
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return st["cnt"]
+        inb = inb.unionByName(boundary)
+        # users silent this batch keep their dangling end
+        carry = prev_last.join(last, "user_id", "left_anti")
+        last = last.unionByName(carry)
+        inb = inb.unionByName(spark.read.parquet(f"{prev}/cnt"))
+    cnt_new = inb.groupBy("cur_type", "next_type").agg(
+        F.sum("n").alias("n")
+    )
+    last.write.mode("overwrite").parquet(f"{new}/last")
+    cnt_new.write.mode("overwrite").parquet(f"{new}/cnt")
 
 
 @register(

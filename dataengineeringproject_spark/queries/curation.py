@@ -25,6 +25,7 @@ from dataengineeringproject_spark.registry import (
     staged,
 )
 from dataengineeringproject_spark.schemas import load_table
+from dataengineeringproject_spark.streaming.commit import pinned_shuffle_partitions
 
 # Per-source sampling rates (percent kept), default for unlisted sources.
 SAMPLE_RATES = {"src0": 100, "src1": 50, "src2": 25}
@@ -351,7 +352,6 @@ def streaming_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     equals the batch aggregate over the whole corpus — the same full
     value-hash oracle as the batch twin."""
     from dataengineeringproject_spark.queries.streaming_q import (
-        _pinned_shuffle_partitions,
         _RUN_ID,
     )
     from dataengineeringproject_spark.streaming.daily import run_to_memory
@@ -359,7 +359,7 @@ def streaming_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _docs(spark, sf_dir)
     land = _staged_docs_land(spark, sf_dir)
     name = f"qgate_q_{next(_RUN_ID)}"
-    with _pinned_shuffle_partitions(spark, 8):
+    with pinned_shuffle_partitions(spark, 8):
         src = (
             spark.readStream.schema(d.schema)
             .option("maxFilesPerTrigger", 1)

@@ -24,6 +24,12 @@ from dataengineeringproject_spark.registry import (
     staged,
 )
 from dataengineeringproject_spark.schemas import load_table, local_df
+from dataengineeringproject_spark.streaming.commit import (
+    append_batch,
+    drive_landing,
+    pinned_shuffle_partitions,
+    read_log,
+)
 
 _TOKS = X.tokens_sql("text")
 _N_HASHES, _BANDS, _SHINGLE_K, _NEARDUP_T = 8, 4, 3, 0.5
@@ -774,6 +780,13 @@ from dataengineeringproject_spark.queries.curation import (  # noqa: E402
 )
 
 
+_GATE_IDX_SCHEMA = "dupkey string, keeper bigint"
+_GATE_REPORT_SCHEMA = (
+    "source string, status string, n_docs bigint, n_pii_redacted bigint,"
+    " n_chars_total bigint"
+)
+
+
 @staged("documents")
 def _run_gate_stream(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """Drive the release-gate stream (streaming_corpus_release_gate)
@@ -787,26 +800,13 @@ def _run_gate_stream(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     idx = scratch_dir("deps_gate_stream_idx_")
     ckpt = scratch_dir("deps_gate_stream_ckpt_")
 
-    idx_schema = "dupkey string, keeper bigint"
-    # seed partition b=-1 so the first trigger's partition-discovery
-    # read sees a valid (empty) parquet table rather than a bare
-    # directory; every real trigger writes to b=<batch_id>
-    spark.createDataFrame([], idx_schema).write.mode(
-        "overwrite"
-    ).parquet(f"{idx}/b=-1")
-
     def _admit(batch_docs: DataFrame, batch_id: int) -> None:
         # one evaluation of the regex-heavy projection feeds both the
         # keeper aggregate and the status join
         g = _gate_doc_frame(batch_docs).localCheckpoint()
-        # prior = index state BEFORE this batch: partition-pruned to
-        # b < batch_id, so a replayed batch never sees its own partial
-        # delta (at-least-once foreachBatch → idempotent recompute)
-        prior = (
-            spark.read.parquet(idx)
-            .filter(F.col("b") < F.lit(int(batch_id)))
-            .select("dupkey", "keeper")
-        )
+        # prior = index state BEFORE this batch (its committed batches
+        # below batch_id), so a replay never sees its own delta
+        prior = read_log(spark, idx, _GATE_IDX_SCHEMA, below=batch_id)
         bk = (
             g.filter(F.col("reason") == "pass")
             .groupBy("dupkey")
@@ -824,36 +824,18 @@ def _run_gate_stream(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
             "n_chars",
             "has_pii",
         )
-        labeled.groupBy("source", "status").agg(
+        report = labeled.groupBy("source", "status").agg(
             F.count(F.lit(1)).cast("long").alias("n_docs"),
             F.sum("has_pii").cast("long").alias("n_pii_redacted"),
             F.sum("n_chars").cast("long").alias("n_chars_total"),
-        ).write.mode("overwrite").parquet(f"{out}/b={int(batch_id)}")
-        # materialize the delta BEFORE touching the directory it was
-        # computed from (ADVICE r10: never rely on plan-time file
-        # listing to sequence a read-then-append on the same path)
-        newk = (
-            bk.join(prior, "dupkey", "left_anti")
-            .select("dupkey", F.col("cand").cast("long").alias("keeper"))
-            .localCheckpoint()
         )
-        newk.write.mode("overwrite").parquet(f"{idx}/b={int(batch_id)}")
-
-    from dataengineeringproject_spark.queries.streaming_q import (
-        _pinned_shuffle_partitions,
-    )
-
-    with _pinned_shuffle_partitions(spark, 8):
-        q = (
-            spark.readStream.schema(d.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(land)
-            .writeStream.foreachBatch(_admit)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+        append_batch(report, out, batch_id)
+        newk = bk.join(prior, "dupkey", "left_anti").select(
+            "dupkey", F.col("cand").cast("long").alias("keeper")
         )
-        q.awaitTermination()
+        append_batch(newk, idx, batch_id)
+
+    drive_landing(spark, land, d.schema, _admit, ckpt)
     return out, idx
 
 
@@ -900,17 +882,16 @@ def streaming_corpus_release_gate(
     join against the index (bucketed by dupkey in production, same as
     the dedup twin's band index); report partials are per-source ×
     per-status rows (tiny); state lives in the index table, not in
-    stream state stores. Restart-safe FOR REAL (ADVICE r10): foreachBatch
-    is at-least-once, so each trigger's report partial and index delta
-    land at a batch_id-keyed partition path with OVERWRITE — a replayed
-    batch recomputes against `prior` = partitions with b < batch_id
-    (excluding its own partial output) and rewrites the same content
-    instead of double-counting; the index delta is localCheckpoint-
-    materialized before the write so the scan of the index directory
-    can never race its own mutation."""
+    stream state stores. Restart-safe: foreachBatch is at-least-once,
+    so the report partials and the index deltas are log-form sinks of
+    `streaming.commit` — each trigger's output lands in its own
+    `batch_id=<id>` dir, a replayed trigger whose dirs committed is
+    skipped, one whose dirs did not recomputes against `prior` = the
+    index batches below its own id, and readers see committed batches
+    only."""
     out, _idx = _run_gate_stream(spark, sf_dir)
     return (
-        spark.read.parquet(out)
+        read_log(spark, out, _GATE_REPORT_SCHEMA)
         .groupBy("source", "status")
         .agg(
             F.sum("n_docs").cast("long").alias("n_docs"),
@@ -1500,14 +1481,15 @@ def incr_dedup_accept(
     return pairs, bbands
 
 
+_INCR_PAIRS_SCHEMA = "id_a bigint, id_b bigint, jaccard double, pair_type string"
+
+
 @staged("documents")
 def _run_incr_stream(spark: SparkSession, sf_dir: str) -> str:
     """Drive the accept-loop stream (streaming_dedup_incremental_minhash)
     over the staged landing zone once per corpus generation; returns
     the dir of accepted pairs."""
     d = _docs(spark, sf_dir)
-    pct = _INCR_EXISTING_PCT
-
     land = _staged_incr_stream_land(spark, sf_dir)
     out = scratch_dir("deps_incr_stream_out_")
     accepted = scratch_dir("deps_incr_stream_idx_")
@@ -1518,30 +1500,14 @@ def _run_incr_stream(spark: SparkSession, sf_dir: str) -> str:
     idx_cols = [f.name for f in idx_schema.fields]
 
     def _accept(batch_docs: DataFrame, batch_id: int) -> None:
-        prior = spark.read.schema(idx_schema).parquet(corpus_idx, accepted)
-        pairs, bbands = incr_dedup_accept(prior, batch_docs, d)
-        pairs.write.mode("append").parquet(out)
-        bbands.select(*idx_cols).write.mode("append").parquet(accepted)
-
-    from dataengineeringproject_spark.queries.streaming_q import (
-        _pinned_shuffle_partitions,
-    )
-
-    # micro-batches are small (|batch|/{slices} docs); 32-way shuffles
-    # inside foreachBatch are pure task overhead — pin low for the
-    # stream's lifetime, restore after (streaming_q's standard pattern)
-    with _pinned_shuffle_partitions(spark, 8):
-        q = (
-            spark.readStream.schema(d.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(land)
-            .filter(_incr_bucket("doc_id") >= pct)
-            .writeStream.foreachBatch(_accept)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+        prior = spark.read.schema(idx_schema).parquet(corpus_idx).unionByName(
+            read_log(spark, accepted, idx_schema, below=batch_id)
         )
-        q.awaitTermination()
+        pairs, bbands = incr_dedup_accept(prior, batch_docs, d)
+        append_batch(pairs, out, batch_id)
+        append_batch(bbands.select(*idx_cols), accepted, batch_id)
+
+    drive_landing(spark, land, d.schema, _accept, ckpt)
     return out
 
 
@@ -1585,9 +1551,13 @@ def streaming_dedup_incremental_minhash(
     so the index side is scanned exchange-free either way);
     per-trigger cost is
     O(micro-batch) + O(band collisions), never O(corpus), and state
-    lives in the index table, not in stream state stores (restart-safe
-    via the checkpoint + idempotent re-append)."""
-    return spark.read.parquet(_run_incr_stream(spark, sf_dir))
+    lives in the index table, not in stream state stores. Restart-safe:
+    the pairs and the accepted bands are log-form sinks of
+    `streaming.commit` (one `batch_id=<id>` dir per trigger, skipped
+    when a replay finds it committed; a step reads the accepted
+    batches below its own id), so a replayed trigger neither appends
+    its pairs twice nor finds its own bands as prior."""
+    return read_log(spark, _run_incr_stream(spark, sf_dir), _INCR_PAIRS_SCHEMA)
 
 
 # --- BM25 ranking + BPE pair statistics (r4) --------------------------------
@@ -4422,7 +4392,6 @@ def streaming_bm25_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         _staged_docs_land,
     )
     from dataengineeringproject_spark.queries.streaming_q import (
-        _pinned_shuffle_partitions,
         _RUN_ID,
     )
     from dataengineeringproject_spark.streaming.daily import run_to_memory
@@ -4430,7 +4399,7 @@ def streaming_bm25_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _docs(spark, sf_dir)
     land = _staged_docs_land(spark, sf_dir)
     name = f"bm25s_q_{next(_RUN_ID)}"
-    with _pinned_shuffle_partitions(spark, 8):
+    with pinned_shuffle_partitions(spark, 8):
         src = (
             spark.readStream.schema(d.schema)
             .option("maxFilesPerTrigger", 1)

@@ -20,6 +20,11 @@ from dataengineeringproject_spark.registry import (
     staged,
 )
 from dataengineeringproject_spark.schemas import load_table, local_df
+from dataengineeringproject_spark.streaming.commit import (
+    append_batch,
+    drive_landing,
+    read_log,
+)
 
 _QUERY_IDS = list(range(10))
 _K, _N_PLANES, _N_DIMS = 5, 4, 64
@@ -2369,6 +2374,9 @@ register_prestage(_staged_pca_cov)
 register_prestage(_staged_pca_top2)
 
 
+_IVFS_POSTINGS_SCHEMA = "vec_id bigint, cid bigint, cosine double"
+
+
 @staged("embeddings")
 def _run_ivf_stream(spark: SparkSession, sf_dir: str) -> str:
     """Drive the postings-append stream (streaming_ivf_index_append)
@@ -2376,15 +2384,10 @@ def _run_ivf_stream(spark: SparkSession, sf_dir: str) -> str:
     returns the appended postings dir."""
     from pyspark.sql import Window
 
-    from dataengineeringproject_spark.queries.streaming_q import (
-        _pinned_shuffle_partitions,
-    )
-
     cb, land = _staged_ivf_codebook(spark, sf_dir)
     cents = spark.read.parquet(cb)
     out = scratch_dir("deps_ivfs_out_")
     ckpt = scratch_dir("deps_ivfs_ckpt_")
-    land_schema = spark.read.parquet(land).schema
 
     def _append(batch_vecs: DataFrame, batch_id: int) -> None:
         w = Window.partitionBy("vec_id").orderBy(
@@ -2399,19 +2402,9 @@ def _run_ivf_stream(spark: SparkSession, sf_dir: str) -> str:
             .filter(F.col("rn") == 1)
             .select("vec_id", "cid", "cosine")
         )
-        assigned.write.mode("append").parquet(out)
+        append_batch(assigned, out, batch_id)
 
-    with _pinned_shuffle_partitions(spark, 8):
-        q = (
-            spark.readStream.schema(land_schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(land)
-            .writeStream.foreachBatch(_append)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    drive_landing(spark, land, spark.read.parquet(land).schema, _append, ckpt)
     return out
 
 
@@ -2455,8 +2448,12 @@ def streaming_ivf_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB: the codebook stays broadcast-sized by construction; the
     postings append is partitioned by cid (partition-pruned probes —
     see ivf_topk's docstring); per-trigger cost is O(micro-batch ×
-    centroids) map-side with one tiny rank shuffle."""
-    return spark.read.parquet(_run_ivf_stream(spark, sf_dir))
+    centroids) map-side with one tiny rank shuffle. Restart-safe: the
+    postings are a log-form sink of `streaming.commit` (one
+    `batch_id=<id>` dir per trigger, skipped when a replay finds it
+    committed), so a replayed trigger does not append its vectors
+    twice."""
+    return read_log(spark, _run_ivf_stream(spark, sf_dir), _IVFS_POSTINGS_SCHEMA)
 
 
 # --- corpus projection onto the top-2 principal components -------------------

@@ -23,6 +23,7 @@ from dataengineeringproject_spark import multimodal as M
 from dataengineeringproject_spark.registry import register
 from dataengineeringproject_spark.schemas import load_table
 from dataengineeringproject_spark.session import ensure_package_on_workers
+from dataengineeringproject_spark.streaming.commit import pinned_shuffle_partitions
 
 # d0/d1/d2/d3 = bytes 0..3 of md5(content), as DuckDB ints.
 _D = [f"CAST(concat('0x', substr(md5(text), {1 + 2 * i}, 2)) AS INT)" for i in range(4)]
@@ -272,7 +273,6 @@ def streaming_multimodal_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         _staged_docs_land,
     )
     from dataengineeringproject_spark.queries.streaming_q import (
-        _pinned_shuffle_partitions,
         _RUN_ID,
     )
     from dataengineeringproject_spark.streaming.daily import run_to_memory
@@ -281,7 +281,7 @@ def streaming_multimodal_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     land = _staged_docs_land(spark, sf_dir)
     name = f"mm_ingest_q_{next(_RUN_ID)}"
-    with _pinned_shuffle_partitions(spark, 8):
+    with pinned_shuffle_partitions(spark, 8):
         src = (
             spark.readStream.schema(d.schema)
             .option("maxFilesPerTrigger", 1)

@@ -16,9 +16,7 @@ query.
 
 from __future__ import annotations
 
-import contextlib
 import itertools
-from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -31,6 +29,7 @@ from dataengineeringproject_spark.registry import (
 )
 from dataengineeringproject_spark.schemas import load_table, local_df
 from dataengineeringproject_spark.session import ensure_package_on_workers
+from dataengineeringproject_spark.streaming.commit import pinned_shuffle_partitions
 from dataengineeringproject_spark.streaming.daily import (
     daily_means_stream,
     daily_mode_stream,
@@ -40,23 +39,6 @@ from dataengineeringproject_spark.streaming.daily import (
 
 _RUN_ID = itertools.count()
 _N_FILES = 3
-
-
-@contextlib.contextmanager
-def _pinned_shuffle_partitions(spark: SparkSession, n: int) -> Iterator[None]:
-    """Scoped shuffle-partition pin: stateful streaming allocates one
-    state store per shuffle partition and cannot AQE-coalesce them, so
-    32+ stores for a 30-key state is pure overhead. The previous value
-    is restored on exit so batch queries running later in the same
-    session keep their configured parallelism. (Local-mode pin — a
-    cluster job sizes this per-job.)"""
-    key = "spark.sql.shuffle.partitions"
-    prev = spark.conf.get(key)
-    spark.conf.set(key, str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set(key, prev)
 
 
 @staged("events")
@@ -190,7 +172,7 @@ def streaming_daily_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows-only exemption."""
     d = _staged_events(spark, sf_dir)
     name = f"daily_mode_q_{next(_RUN_ID)}"
-    with _pinned_shuffle_partitions(spark, 8):
+    with pinned_shuffle_partitions(spark, 8):
         stream = daily_mode_stream(
             read_events_stream(spark, d, max_files_per_trigger=1)
         )
@@ -213,7 +195,7 @@ def streaming_daily_means(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-day emission equals the batch aggregate."""
     d = _staged_events(spark, sf_dir)
     name = f"daily_means_q_{next(_RUN_ID)}"
-    with _pinned_shuffle_partitions(spark, 8):
+    with pinned_shuffle_partitions(spark, 8):
         stream = daily_means_stream(
             read_events_stream(spark, d, max_files_per_trigger=1)
         )
@@ -246,7 +228,7 @@ def streaming_dedup_daily_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = _staged_events(spark, sf_dir, dups=True)
     name = f"dedup_counts_q_{next(_RUN_ID)}"
-    with _pinned_shuffle_partitions(spark, 8):
+    with pinned_shuffle_partitions(spark, 8):
         stream = dedup_daily_counts_stream(
             read_events_stream(spark, d, max_files_per_trigger=1)
         )
@@ -284,7 +266,7 @@ def streaming_sliding_means(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = _staged_events(spark, sf_dir)
     name = f"sliding_means_q_{next(_RUN_ID)}"
-    with _pinned_shuffle_partitions(spark, 8):
+    with pinned_shuffle_partitions(spark, 8):
         stream = sliding_means_stream(
             read_events_stream(spark, d, max_files_per_trigger=1)
         )
@@ -320,7 +302,7 @@ def streaming_band_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     exemption."""
     d = _staged_events(spark, sf_dir)
     name = f"band_join_q_{next(_RUN_ID)}"
-    with _pinned_shuffle_partitions(spark, 8):
+    with pinned_shuffle_partitions(spark, 8):
         purchases = (
             read_events_stream(spark, d, max_files_per_trigger=1)
             .filter(F.col("event_type") == "purchase")
@@ -389,7 +371,7 @@ def streaming_static_join_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _staged_events(spark, sf_dir)
     name = f"static_join_q_{next(_RUN_ID)}"
     weights = local_df(spark, _TYPE_WEIGHTS, "event_type string, weight double")
-    with _pinned_shuffle_partitions(spark, 8):
+    with pinned_shuffle_partitions(spark, 8):
         ev = read_events_stream(spark, d, max_files_per_trigger=1)
         enriched = ev.join(F.broadcast(weights), "event_type")
         agg = (
@@ -444,7 +426,7 @@ def streaming_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN — full oracle hash check, no rows-only exemption."""
     d = _staged_events(spark, sf_dir, sentinel=True)
     name = f"outer_join_q_{next(_RUN_ID)}"
-    with _pinned_shuffle_partitions(spark, 8):
+    with pinned_shuffle_partitions(spark, 8):
         # ONE source, self-joined. Two independent readStream instances
         # over the same directory can disagree on per-batch file sets,
         # and the global watermark is the MIN across inputs — one lagging
@@ -529,7 +511,7 @@ def streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle row-for-row — full hash check, no rows-only exemption."""
     d = _staged_events(spark, sf_dir, sentinel=True)
     name = f"session_win_q_{next(_RUN_ID)}"
-    with _pinned_shuffle_partitions(spark, 8):
+    with pinned_shuffle_partitions(spark, 8):
         src = read_events_stream(spark, d, max_files_per_trigger=1)
         agg = (
             src.withWatermark("ts", "1 day")
@@ -627,7 +609,7 @@ def streaming_hll_daily_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = _staged_events(spark, sf_dir)
     name = f"hll_daily_q_{next(_RUN_ID)}"
-    with _pinned_shuffle_partitions(spark, 8):
+    with pinned_shuffle_partitions(spark, 8):
         src = read_events_stream(spark, d, max_files_per_trigger=1)
         obs = _hll_bucket_rank(src.select("ts", "user_id"), ["ts"], "user_id")
         agg = (
@@ -699,7 +681,7 @@ def streaming_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = _staged_events(spark, sf_dir)
     name = f"cms_hh_q_{next(_RUN_ID)}"
-    with _pinned_shuffle_partitions(spark, 8):
+    with pinned_shuffle_partitions(spark, 8):
         src = read_events_stream(spark, d, max_files_per_trigger=1)
         cells = src.select(
             F.explode(
@@ -811,7 +793,7 @@ def streaming_bloom_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = _staged_events(spark, sf_dir)
     name = f"bloom_dedup_q_{next(_RUN_ID)}"
-    with _pinned_shuffle_partitions(spark, 8):
+    with pinned_shuffle_partitions(spark, 8):
         src = read_events_stream(spark, d, max_files_per_trigger=1)
         build = src.filter(
             (F.col("event_type") == "purchase")
@@ -871,7 +853,7 @@ def streaming_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _staged_events(spark, sf_dir)
     name = f"psi_q_{next(_RUN_ID)}"
     _, project = psi_observations(spark, sf_dir)
-    with _pinned_shuffle_partitions(spark, 8):
+    with pinned_shuffle_partitions(spark, 8):
         src = read_events_stream(spark, d, max_files_per_trigger=1)
         obs = project(src)
         agg = obs.groupBy("event_type", "bin").agg(
@@ -945,7 +927,7 @@ def streaming_trend_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = _staged_events(spark, sf_dir)
     name = f"trend_q_{next(_RUN_ID)}"
-    with _pinned_shuffle_partitions(spark, 8):
+    with pinned_shuffle_partitions(spark, 8):
         src = read_events_stream(spark, d, max_files_per_trigger=1)
         agg = (
             src.withWatermark("ts", "1 day")
@@ -983,7 +965,7 @@ def streaming_seasonal_dow(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = _staged_events(spark, sf_dir)
     name = f"seas_q_{next(_RUN_ID)}"
-    with _pinned_shuffle_partitions(spark, 8):
+    with pinned_shuffle_partitions(spark, 8):
         src = read_events_stream(spark, d, max_files_per_trigger=1)
         agg = (
             src.withWatermark("ts", "1 day")
@@ -1019,7 +1001,7 @@ def streaming_cusum_level_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = _staged_events(spark, sf_dir)
     name = f"cusum_q_{next(_RUN_ID)}"
-    with _pinned_shuffle_partitions(spark, 8):
+    with pinned_shuffle_partitions(spark, 8):
         src = read_events_stream(spark, d, max_files_per_trigger=1)
         agg = (
             src.withWatermark("ts", "1 day")

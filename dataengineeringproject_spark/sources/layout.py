@@ -121,45 +121,3 @@ def write_zordered(
     z = morton2(col_a, col_b, bits)
     df.sortWithinPartitions(z).write.mode("overwrite").parquet(path)
     return path
-
-
-def vacuum_versions(
-    root: str, keep: int = 2, current: str | None = None
-) -> list[str]:
-    """Retention for copy-on-write versioned tables (the v<N> snapshot
-    directories the streaming CDC upsert commits): delete all but the
-    newest `keep` versions under `root`, ALWAYS retaining `current`
-    (the committed pointer) regardless of its position — vacuuming the
-    live version is the one unrecoverable mistake, so it is
-    structurally impossible here.
-
-    Without retention a copy-on-write table's storage grows by one
-    full snapshot per commit forever; with it, storage is bounded at
-    `keep` snapshots (current + grace copies for in-flight readers —
-    the same contract as Delta VACUUM / Iceberg expire_snapshots,
-    reduced to its filesystem core). Versions are ordered by their
-    integer suffix (commit order), never by mtime — clock skew on a
-    distributed filesystem must not reorder retention. Returns the
-    removed directory paths (the audit trail a table-maintenance job
-    logs)."""
-    import os
-    import re
-    import shutil
-
-    if keep < 1:
-        raise ValueError(f"keep must be >= 1, got {keep}")
-    vers = []
-    for name in os.listdir(root):
-        m = re.fullmatch(r"v(\d+)", name)
-        if m and os.path.isdir(os.path.join(root, name)):
-            vers.append((int(m.group(1)), os.path.join(root, name)))
-    vers.sort()
-    survivors = {p for _, p in vers[-keep:]}
-    if current is not None:
-        survivors.add(os.path.normpath(current))
-    removed = []
-    for _, p in vers:
-        if os.path.normpath(p) not in survivors:
-            shutil.rmtree(p)
-            removed.append(p)
-    return removed

@@ -9,19 +9,16 @@ the standard re-aggregation-free upsert: work per batch is
 O(|batch| + |touched days|), not O(|history|).
 
 Exactly-once: `foreachBatch` gives at-least-once per batch id on
-restart, so the sink must be idempotent — the gold table carries the
-id of the last merged batch and a replayed batch (batch_id <= stored)
-is a no-op. This is exactly what Delta's `txnAppId`/`txnVersion` does;
-here it is explicit because the sink is plain parquet.
-
-Crash safety: the gold table is VERSIONED — each merge writes a fresh
-`gold_path/v=<batch_id>` directory and readers resolve the highest
-version whose `_SUCCESS` marker exists. The previous version is never
-touched until the new one is fully committed, so a crash mid-write
-leaves the prior table intact (a naive overwrite-in-place deletes the
-old data before committing the new — one crash destroys the table).
-Superseded versions are pruned after commit. This is a 2-line MVCC:
-what Delta's transaction log does, minus the log.
+restart, so the gold table is a snapshot-form sink of
+`streaming.commit`: each merge writes the whole table as version
+`gold_path/v=<batch_id>`, readers resolve the highest version whose
+`_SUCCESS` marker exists, and a replayed batch (batch_id <= that
+version) is a no-op — what Delta's `txnAppId`/`txnVersion` does, here
+explicit because the sink is plain parquet. The previous version is
+never touched until the new one is fully committed, so a crash
+mid-write leaves the prior table intact (a naive overwrite-in-place
+deletes the old data before committing the new — one crash destroys
+the table). Superseded versions are removed after the commit.
 
 Scale posture: the gold table is day-grain — bounded by calendar days,
 tiny relative to input — so read-merge-rewrite is cheap. At 100 TB
@@ -32,12 +29,14 @@ partial-aggregate shape and the idempotency guard carry over unchanged.
 
 from __future__ import annotations
 
-import shutil
-from pathlib import Path
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from dataengineeringproject_spark.streaming.commit import (
+    commit_version,
+    latest_version,
+)
 
 GOLD_SCHEMA = T.StructType(
     [
@@ -62,33 +61,16 @@ def _daily_partials(batch_df: DataFrame) -> DataFrame:
     )
 
 
-def _latest_gold_version(gold_path: str) -> tuple[int, str] | None:
-    """(batch_id, dir) of the highest COMPLETE version (`_SUCCESS`
-    present). Incomplete directories from a crashed write are ignored —
-    and overwritten if that batch id is ever retried."""
-    base = Path(gold_path)
-    if not base.exists():
-        return None
-    best: tuple[int, str] | None = None
-    for p in base.glob("v=*"):
-        if not (p / "_SUCCESS").exists():
-            continue
-        try:
-            vid = int(p.name.split("=", 1)[1])
-        except ValueError:
-            continue
-        if best is None or vid > best[0]:
-            best = (vid, str(p))
-    return best
+def _gold_version(spark: SparkSession, version: str | None) -> DataFrame:
+    if version is None:
+        return spark.createDataFrame([], GOLD_SCHEMA)
+    return spark.read.schema(GOLD_SCHEMA).parquet(version)
 
 
 def read_daily_gold(spark: SparkSession, gold_path: str) -> DataFrame:
     """Read the current gold table: the highest complete version, or an
     empty frame if no version has ever committed."""
-    latest = _latest_gold_version(gold_path)
-    if latest is None:
-        return spark.createDataFrame([], GOLD_SCHEMA)
-    return spark.read.schema(GOLD_SCHEMA).parquet(latest[1])
+    return _gold_version(spark, latest_version(gold_path))
 
 
 def merge_daily_gold(
@@ -97,33 +79,29 @@ def merge_daily_gold(
     """Merge one micro-batch's daily partials into the parquet gold
     table (upsert by day; idempotent on batch replay; versioned write —
     the prior version survives a crash mid-commit)."""
-    latest = _latest_gold_version(gold_path)
-    if latest is not None and batch_id <= latest[0]:
-        return  # replayed batch: already merged
-    gold = read_daily_gold(spark, gold_path)
-    partial = _daily_partials(batch_df)
-    merged = (
-        gold.join(partial, "day", "full_outer")
-        .select(
-            "day",
-            (
-                F.coalesce("sum_value", F.lit(0.0))
-                + F.coalesce("b_sum", F.lit(0.0))
-            ).alias("sum_value"),
-            (
-                F.coalesce("n_events", F.lit(0))
-                + F.coalesce("b_n", F.lit(0))
-            ).cast("long").alias("n_events"),
+
+    def write(prev: str | None, new: str) -> None:
+        gold = _gold_version(spark, prev)
+        partial = _daily_partials(batch_df)
+        merged = (
+            gold.join(partial, "day", "full_outer")
+            .select(
+                "day",
+                (
+                    F.coalesce("sum_value", F.lit(0.0))
+                    + F.coalesce("b_sum", F.lit(0.0))
+                ).alias("sum_value"),
+                (
+                    F.coalesce("n_events", F.lit(0))
+                    + F.coalesce("b_n", F.lit(0))
+                ).cast("long").alias("n_events"),
+            )
+            .withColumn("avg_value", F.col("sum_value") / F.col("n_events"))
+            .withColumn("last_batch_id", F.lit(batch_id).cast("long"))
         )
-        .withColumn("avg_value", F.col("sum_value") / F.col("n_events"))
-        .withColumn("last_batch_id", F.lit(batch_id).cast("long"))
-    )
-    out = Path(gold_path) / f"v={batch_id}"
-    merged.write.mode("overwrite").parquet(str(out))
-    # prune superseded versions only AFTER the new one is durable
-    for p in Path(gold_path).glob("v=*"):
-        if p != out:
-            shutil.rmtree(p, ignore_errors=True)
+        merged.write.mode("overwrite").parquet(new)
+
+    commit_version(gold_path, batch_id, write)
 
 
 def daily_gold_upsert_query(

@@ -8,6 +8,9 @@ from __future__ import annotations
 
 import datetime as dt
 import math
+import shutil
+import tempfile
+from collections import Counter
 from pathlib import Path
 
 import duckdb
@@ -79,3 +82,44 @@ def compare(spark, name: str, sf_dir: str) -> tuple[bool, str]:
         diffs = [(x, y) for x, y in zip(a, b) if x != y][:5]
         return False, f"values differ; first diffs: {diffs}"
     return True, f"match: {len(spark_pdf)} rows"
+
+
+def drop_last_commit(checkpoint: str) -> int:
+    """Make a stream's next run replay its last batch, as after a crash
+    between the sink's write and the checkpoint commit: delete the
+    checkpoint's last `commits/<n>` file and its `.<n>.crc`."""
+    commits = Path(checkpoint) / "commits"
+    n = max(int(p.name) for p in commits.iterdir() if p.name.isdigit())
+    (commits / str(n)).unlink()
+    (commits / f".{n}.crc").unlink(missing_ok=True)
+    return n
+
+
+def rows(df) -> Counter:
+    return Counter(tuple(r) for r in df.collect())
+
+
+def replay_registry_query(spark, monkeypatch, module, query: str, runner: str,
+                          sf_dir: str) -> tuple[Counter, Counter]:
+    """Run registered `query` of `module` through its unmemoized stream
+    `runner` twice with the same checkpoint and output dirs, dropping
+    the last checkpoint commit in between; returns the query's output
+    row multiset after the first run and after the replay."""
+    getattr(module, query)(spark, sf_dir).count()  # stage landing zones
+    dirs: dict[str, str] = {}
+
+    def fixed_dir(prefix: str) -> str:
+        if prefix not in dirs:
+            dirs[prefix] = tempfile.mkdtemp(prefix=prefix)
+        return dirs[prefix]
+
+    monkeypatch.setattr(module, "scratch_dir", fixed_dir)
+    monkeypatch.setattr(module, runner, getattr(module, runner).__wrapped__)
+    try:
+        first = rows(getattr(module, query)(spark, sf_dir))
+        (ckpt,) = [d for p, d in dirs.items() if "ckpt" in p]
+        drop_last_commit(ckpt)
+        return first, rows(getattr(module, query)(spark, sf_dir))
+    finally:
+        for d in dirs.values():
+            shutil.rmtree(d, ignore_errors=True)

@@ -343,38 +343,3 @@ def test_aqe_splits_skewed_join_at_runtime(spark, tmp_path):
         assert len(j.collect()) == 200_000 + 2_000
         plan = _executed_plan(j)
     assert "skew=true" in plan, plan
-
-
-def test_vacuum_versions_bounds_cow_storage(tmp_path):
-    """vacuum_versions must keep exactly the newest `keep` snapshot
-    dirs by COMMIT ORDER (integer suffix, not mtime), always retain
-    the committed current pointer even when it is old, and report the
-    removed paths."""
-    import os
-
-    from dataengineeringproject_spark.sources import layout
-
-    for i in range(5):
-        d = tmp_path / f"v{i}"
-        d.mkdir()
-        (d / "part-0.parquet").write_bytes(b"x")
-    (tmp_path / "not_a_version").mkdir()
-
-    removed = layout.vacuum_versions(str(tmp_path), keep=2)
-    assert sorted(os.path.basename(p) for p in removed) == ["v0", "v1", "v2"]
-    left = sorted(p.name for p in tmp_path.iterdir())
-    assert left == ["not_a_version", "v3", "v4"]
-
-    # current pointer survives even when older than the keep window
-    removed = layout.vacuum_versions(
-        str(tmp_path), keep=1, current=str(tmp_path / "v3")
-    )
-    assert removed == []
-    assert sorted(p.name for p in tmp_path.iterdir()) == [
-        "not_a_version", "v3", "v4",
-    ]
-
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        layout.vacuum_versions(str(tmp_path), keep=0)
